@@ -25,11 +25,13 @@ collection; the long-lived SparkSession plays the module-global client
 from __future__ import annotations
 
 import copy
+import functools
 import hashlib
 import json
 import threading
+from types import SimpleNamespace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parse_vector_db_spark.functions.classifiers import case_decision_expr
@@ -108,6 +110,28 @@ class SparkVectorService:
         # insert (their tmp files age out with the process).
         self._index_cache: dict = {}
         self._index_lock = threading.Lock()
+        # Snapshot-frame memo: the court-level-filtered chunk DataFrame per
+        # (manifest version, level). Re-reading it per request (a second
+        # head glob, the manifest JSON, a parquet listing + schema
+        # discovery per commit leg) was ~100 ms of driver time per
+        # search. Invariants:
+        #   * keyed on the manifest version the request already read, so
+        #     one request never mixes versions, and a memoised frame is the
+        #     exact data a fresh read at that version returns — commit
+        #     dirs are immutable once published;
+        #   * vacuum cannot pull files from under a frame a new request
+        #     uses: a request reads the head first and so only ever uses
+        #     the head's frame, whose commit dirs the head manifest
+        #     references and vacuum therefore keeps; once the head moves,
+        #     the next request builds the
+        #     new head's frame, which drops every older one (the
+        #     _index_cache eviction) — an old frame is never read again;
+        #   * raw (manifested=False) mode is NOT memoised: its parquet root
+        #     is appended in place and its local counter names no data
+        #     (another process's append never moves it), so it keeps a
+        #     fresh spark.read.parquet per request.
+        self._frames: dict = {}
+        self._frame_lock = threading.Lock()
 
     # -- write path --------------------------------------------------------
 
@@ -126,8 +150,6 @@ class SparkVectorService:
         # deterministic doc_id from the file name (hash(), salted per run,
         # would break re-ingest idempotence tests); 48 bits so
         # doc_id * 1000 + chunk_idx stays inside int64 under ANSI arithmetic
-        import hashlib
-
         doc_id = int(hashlib.sha256(file_name.encode()).hexdigest()[:12], 16)
         docs = self.spark.createDataFrame(
             [(doc_id, text, int(court_level))], "doc_id long, text string, court_level int"
@@ -191,7 +213,11 @@ class SparkVectorService:
                         self.path
                     )
                     self._version += 1  # invalidates every cached search
-            written = self._chunks().filter(
+                # the version this ingest published (counted there, not at
+                # whatever head a later foreign commit made); the level's
+                # frame is the one this level's next search reuses
+                version = self._version
+            written = self._level(version, int(court_level)).filter(
                 F.col("file_id") == F.sha2(F.lit(file_name), 256)
             )
             row = written.agg(
@@ -200,6 +226,101 @@ class SparkVectorService:
         return {"chunks_inserted": row.n, "case_decision": row.d}
 
     # -- read path ---------------------------------------------------------
+
+    def _request(self, text: str, court_level: int, index: str) -> tuple[int, int]:
+        """Shared request validation plus the request's ONE version read;
+        returns (version, target court level).
+
+        Manifested mode exists for MULTI-PROCESS writers, so the local
+        counter is not enough there: it reads the manifest head (one cheap
+        globStatus), which any process's commit advances, and everything
+        the request reads after this — the snapshot frame, the tier
+        index, the response-cache key — is at that version, so a commit
+        landing mid-request cannot file version v+1 rows under key v. Raw
+        mode reads its root fresh; an append landing mid-request bumps the
+        counter once written, so an entry filed under the old key is dead
+        on arrival."""
+        if index not in _TIERS:
+            raise ValueError("index must be one of: " + ", ".join(_TIERS))
+        if not text or not text.strip():
+            raise ValueError("No text could be extracted from the PDF")
+        if self.manifested:
+            from pdf_parse_vector_db_spark.sources import manifest as M
+
+            version = M.head_version(self.spark, self.path)
+        else:
+            version = self._version
+        return version, int(court_level) + 1
+
+    def _embed(self, text: str) -> tuple[list, Column]:
+        """(qvec, q): the first usable chunk's embedding and its array
+        literal. The reference embeds every chunk and keeps [0]
+        (extract_and_search_v2.py:124-135); embedding only the first chunk
+        with a usable embedding is the same result without the discarded
+        calls (empty-embedding chunks are dropped upstream there too).
+
+        The literal is ONE py4j call: a SQL array of DOUBLE literals, whose
+        repr() round-trips every value exactly. F.array of per-element lits
+        made dim + 1 calls, and F.lit of a list or ndarray still crosses
+        the gateway once per element."""
+        for first_chunk in chunk_text(text):
+            qvec = embed_text_py(first_chunk, self.dim)
+            if qvec is not None:
+                return qvec, F.expr(
+                    "array(" + ", ".join(f"{x!r}D" for x in qvec) + ")"
+                )
+        raise ValueError("No text could be extracted from the PDF")
+
+    def _cached(self, key: tuple) -> dict | None:
+        with self._cache_lock:
+            if key in self._cache:
+                self.cache_hits += 1
+                # defensive copy: a caller annotating the response must
+                # not poison every later hit on this key
+                return copy.deepcopy(self._cache[key])
+        return None
+
+    def _remember(self, key: tuple, out: dict) -> None:
+        with self._cache_lock:
+            self.cache_misses += 1
+            if len(self._cache) >= self.search_cache_size:
+                # FIFO eviction: dicts preserve insertion order; the
+                # version bump already evicts whole generations, so
+                # recency bookkeeping buys little here
+                self._cache.pop(next(iter(self._cache)))
+            # store our own private copy for the same reason as the hit path
+            self._cache[key] = copy.deepcopy(out)
+
+    def _hits(self, index: str, version: int, target: int, qvec: list, q: Column):
+        """The candidate stage every entry point shares: ≤ SEARCH_FETCH_K
+        chunk rows + exact ``dist`` at `version`, through the chosen tier
+        (exact = brute force over the level's memoised frame)."""
+        if index != "exact":
+            return self._tier_candidates(index, version, target, qvec, q)
+        return (
+            _with_dist(self._level(version, target), q)
+            .orderBy(*_exprs().by_dist)
+            .limit(SEARCH_FETCH_K)
+        )
+
+    @staticmethod
+    def _ranked(hits: DataFrame) -> list[dict]:
+        """Best chunk per file in ascending (dist, chunk_id) order."""
+        best = knn.dedup_best_per_group(
+            hits, group_col="file_id", score_col="dist", tiebreak_cols=("chunk_id",)
+        )
+        rows = (
+            best.orderBy(*_exprs().by_dist)
+            .select(
+                "chunk_id",
+                "file_id",
+                "file_name",
+                "case_decision",
+                _exprs().score.alias("score"),
+            )
+            .collect()
+        )
+        return [r.asDict() for r in rows]
 
     def search_similar_cases(
         self,
@@ -238,26 +359,7 @@ class SparkVectorService:
         tail, so the golden shape is tier-independent; recall vs exact
         is pinned in tests/test_api.py. Responses cache per (query,
         version, tier)."""
-        if index not in ("exact", "ivf", "graph", "bq", "sq8"):
-            raise ValueError("index must be one of: exact, ivf, graph, bq, sq8")
-        if not text or not text.strip():
-            raise ValueError("No text could be extracted from the PDF")
-        target = int(court_level) + 1
-
-        import hashlib
-
-        # version read is deliberately pre-search: a concurrent ingest
-        # committing mid-search bumps the version, so this entry is
-        # already stale at insert and can never serve post-ingest readers.
-        # Manifested mode exists for MULTI-PROCESS writers, so the local
-        # counter is not enough there — key on the manifest head (one
-        # cheap globStatus), which any process's commit advances.
-        if self.manifested:
-            from pdf_parse_vector_db_spark.sources import manifest as M
-
-            version = M.head_version(self.spark, self.path)
-        else:
-            version = self._version
+        version, target = self._request(text, court_level, index)
         key = (
             hashlib.sha256(text.encode()).hexdigest(),
             file_name,
@@ -266,56 +368,25 @@ class SparkVectorService:
             version,
             index,
         )
-        with self._cache_lock:
-            if key in self._cache:
-                self.cache_hits += 1
-                # defensive copy: a caller annotating the response must
-                # not poison every later hit on this key
-                return copy.deepcopy(self._cache[key])
-
-        # the reference embeds every chunk and keeps [0]
-        # (extract_and_search_v2.py:124-135); embedding only the first chunk
-        # with a usable embedding is the same result without the discarded
-        # calls (empty-embedding chunks are dropped upstream there too)
-        qvec = None
-        for first_chunk in chunk_text(text):
-            qvec = embed_text_py(first_chunk, self.dim)
-            if qvec is not None:
-                break
-        if qvec is None:
-            raise ValueError("No text could be extracted from the PDF")
-        q = F.array(*[F.lit(float(x)) for x in qvec])
-
+        out = self._cached(key)
+        if out is not None:
+            return out
+        qvec, q = self._embed(text)
         with scoped_pool(self.spark, "search"):
-            if index == "exact":
-                hits = (
-                    self._chunks()
-                    .filter(F.col("court_level") == target)
-                    .withColumn("dist", l2_distance(F.col("embedding"), q))
-                    .orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
-                    .limit(SEARCH_FETCH_K)
-                )
-            else:
-                hits = self._tier_candidates(index, version, target, qvec, q)
             best = knn.dedup_best_per_group(
-                hits, group_col="file_id", score_col="dist", tiebreak_cols=("chunk_id",)
+                self._hits(index, version, target, qvec, q),
+                group_col="file_id",
+                score_col="dist",
+                tiebreak_cols=("chunk_id",),
             )
             top = (
-                best.orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
+                best.orderBy(*_exprs().by_dist)
                 .limit(top_k)
-                .withColumn("score", F.round(F.col("dist"), 4))
+                .withColumn("score", _exprs().score)
             )
             resp = knn.search_response(top, file_name, int(court_level))
             out = json.loads(resp.collect()[0][0])
-        with self._cache_lock:
-            self.cache_misses += 1
-            if len(self._cache) >= self.search_cache_size:
-                # FIFO eviction: dicts preserve insertion order; the
-                # version bump already evicts whole generations, so
-                # recency bookkeeping buys little here
-                self._cache.pop(next(iter(self._cache)))
-            # store our own private copy for the same reason as the hit path
-            self._cache[key] = copy.deepcopy(out)
+        self._remember(key, out)
         return out
 
     def range_search(
@@ -341,59 +412,17 @@ class SparkVectorService:
         for range search on an index."""
         if radius <= range_filter:
             raise ValueError("radius must exceed range_filter (L2: outer bound)")
-        if index not in ("exact", "ivf", "graph", "bq", "sq8"):
-            raise ValueError("index must be one of: exact, ivf, graph, bq, sq8")
-        if not text or not text.strip():
-            raise ValueError("No text could be extracted from the PDF")
-        target = int(court_level) + 1
-        qvec = None
-        for first_chunk in chunk_text(text):
-            qvec = embed_text_py(first_chunk, self.dim)
-            if qvec is not None:
-                break
-        if qvec is None:
-            raise ValueError("No text could be extracted from the PDF")
-        q = F.array(*[F.lit(float(x)) for x in qvec])
-        if self.manifested:
-            from pdf_parse_vector_db_spark.sources import manifest as M
-
-            version = M.head_version(self.spark, self.path)
-        else:
-            version = self._version
-
+        version, target = self._request(text, court_level, index)
+        qvec, q = self._embed(text)
+        band = (F.col("dist") < float(radius)) & (F.col("dist") >= float(range_filter))
         with scoped_pool(self.spark, "search"):
             if index == "exact":
-                hits = (
-                    self._chunks()
-                    .filter(F.col("court_level") == target)
-                    .withColumn("dist", l2_distance(F.col("embedding"), q))
-                    # band filter BEFORE any ordering: the scan + filter
-                    # is the whole corpus-proportional work
-                    .filter(
-                        (F.col("dist") < float(radius))
-                        & (F.col("dist") >= float(range_filter))
-                    )
-                )
+                # band filter BEFORE any ordering: the scan + filter is
+                # the whole corpus-proportional work
+                hits = _with_dist(self._level(version, target), q).filter(band)
             else:
-                hits = self._tier_candidates(index, version, target, qvec, q).filter(
-                    (F.col("dist") < float(radius))
-                    & (F.col("dist") >= float(range_filter))
-                )
-            best = knn.dedup_best_per_group(
-                hits, group_col="file_id", score_col="dist", tiebreak_cols=("chunk_id",)
-            )
-            rows = (
-                best.orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
-                .select(
-                    "chunk_id",
-                    "file_id",
-                    "file_name",
-                    "case_decision",
-                    F.round(F.col("dist"), 4).alias("score"),
-                )
-                .collect()
-            )
-        return [r.asDict() for r in rows]
+                hits = self._tier_candidates(index, version, target, qvec, q).filter(band)
+            return self._ranked(hits)
 
     def search_iterator(
         self,
@@ -414,52 +443,10 @@ class SparkVectorService:
         iterators likewise page within the engine's reduced result set)."""
         if batch_size < 1:
             raise ValueError("batch_size must be >= 1")
-        if index not in ("exact", "ivf", "graph", "bq", "sq8"):
-            raise ValueError("index must be one of: exact, ivf, graph, bq, sq8")
-        if not text or not text.strip():
-            raise ValueError("No text could be extracted from the PDF")
-        target = int(court_level) + 1
-        qvec = None
-        for first_chunk in chunk_text(text):
-            qvec = embed_text_py(first_chunk, self.dim)
-            if qvec is not None:
-                break
-        if qvec is None:
-            raise ValueError("No text could be extracted from the PDF")
-        q = F.array(*[F.lit(float(x)) for x in qvec])
-        if self.manifested:
-            from pdf_parse_vector_db_spark.sources import manifest as M
-
-            version = M.head_version(self.spark, self.path)
-        else:
-            version = self._version
-
+        version, target = self._request(text, court_level, index)
+        qvec, q = self._embed(text)
         with scoped_pool(self.spark, "search"):
-            if index == "exact":
-                hits = (
-                    self._chunks()
-                    .filter(F.col("court_level") == target)
-                    .withColumn("dist", l2_distance(F.col("embedding"), q))
-                    .orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
-                    .limit(SEARCH_FETCH_K)
-                )
-            else:
-                hits = self._tier_candidates(index, version, target, qvec, q)
-            best = knn.dedup_best_per_group(
-                hits, group_col="file_id", score_col="dist", tiebreak_cols=("chunk_id",)
-            )
-            rows = (
-                best.orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
-                .select(
-                    "chunk_id",
-                    "file_id",
-                    "file_name",
-                    "case_decision",
-                    F.round(F.col("dist"), 4).alias("score"),
-                )
-                .collect()
-            )
-        ranked = [r.asDict() for r in rows]
+            ranked = self._ranked(self._hits(index, version, target, qvec, q))
 
         def pages():
             for i in range(0, len(ranked), batch_size):
@@ -488,54 +475,22 @@ class SparkVectorService:
         cuts to group_size under the sort — and the group ranking runs
         over one-row-per-file bests; everything after the candidate
         stage is ≤ fetch_k rows."""
-        from pyspark.sql import Window
-
         if limit < 1 or group_size < 1:
             raise ValueError("limit and group_size must be >= 1")
-        if index not in ("exact", "ivf", "graph", "bq", "sq8"):
-            raise ValueError("index must be one of: exact, ivf, graph, bq, sq8")
-        if not text or not text.strip():
-            raise ValueError("No text could be extracted from the PDF")
-        target = int(court_level) + 1
-        qvec = None
-        for first_chunk in chunk_text(text):
-            qvec = embed_text_py(first_chunk, self.dim)
-            if qvec is not None:
-                break
-        if qvec is None:
-            raise ValueError("No text could be extracted from the PDF")
-        q = F.array(*[F.lit(float(x)) for x in qvec])
-        if self.manifested:
-            from pdf_parse_vector_db_spark.sources import manifest as M
-
-            version = M.head_version(self.spark, self.path)
-        else:
-            version = self._version
-
+        version, target = self._request(text, court_level, index)
+        qvec, q = self._embed(text)
         with scoped_pool(self.spark, "search"):
-            if index == "exact":
-                hits = (
-                    self._chunks()
-                    .filter(F.col("court_level") == target)
-                    .withColumn("dist", l2_distance(F.col("embedding"), q))
-                    .orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
-                    .limit(SEARCH_FETCH_K)
-                )
-            else:
-                hits = self._tier_candidates(index, version, target, qvec, q)
-            w = Window.partitionBy("file_id").orderBy(
-                F.col("dist").asc(), F.col("chunk_id").asc()
-            )
-            per = hits.withColumn("hit_rank", F.row_number().over(w)).filter(
-                F.col("hit_rank") <= int(group_size)
-            )
+            hits = self._hits(index, version, target, qvec, q)
+            per = hits.withColumn(
+                "hit_rank", knn.rank_in_group("file_id", "dist", ("chunk_id",))
+            ).filter(F.col("hit_rank") <= int(group_size))
             rows = (
                 per.select(
                     "file_id",
                     "file_name",
                     "chunk_id",
                     "hit_rank",
-                    F.round(F.col("dist"), 4).alias("score"),
+                    _exprs().score.alias("score"),
                 )
                 .orderBy(F.col("score").asc(), F.col("chunk_id").asc())
                 .collect()
@@ -590,22 +545,9 @@ class SparkVectorService:
         Plan shape: both legs end in TakeOrdered cuts before any window;
         the fusion joins two ≤depth per-file sides. Responses cache per
         (query, version, tier, ranker, weights) like every search."""
-        if index not in ("exact", "ivf", "graph", "bq", "sq8"):
-            raise ValueError("index must be one of: exact, ivf, graph, bq, sq8")
         if ranker not in ("rrf", "weighted"):
             raise ValueError("ranker must be one of: rrf, weighted")
-        if not text or not text.strip():
-            raise ValueError("No text could be extracted from the PDF")
-        target = int(court_level) + 1
-
-        import hashlib
-
-        if self.manifested:
-            from pdf_parse_vector_db_spark.sources import manifest as M
-
-            version = M.head_version(self.spark, self.path)
-        else:
-            version = self._version
+        version, target = self._request(text, court_level, index)
         key = (
             "hybrid",
             hashlib.sha256(text.encode()).hexdigest(),
@@ -617,19 +559,10 @@ class SparkVectorService:
             ranker,
             tuple(float(w) for w in weights),
         )
-        with self._cache_lock:
-            if key in self._cache:
-                self.cache_hits += 1
-                return copy.deepcopy(self._cache[key])
-
-        qvec = None
-        for first_chunk in chunk_text(text):
-            qvec = embed_text_py(first_chunk, self.dim)
-            if qvec is not None:
-                break
-        if qvec is None:
-            raise ValueError("No text could be extracted from the PDF")
-        q = F.array(*[F.lit(float(x)) for x in qvec])
+        out = self._cached(key)
+        if out is not None:
+            return out
+        qvec, q = self._embed(text)
         # deterministic query-term set: first N distinct tokens in
         # appearance order (an analyzer's token cap, Milvus-style)
         seen: dict[str, None] = {}
@@ -642,16 +575,7 @@ class SparkVectorService:
 
         with scoped_pool(self.spark, "search"):
             # dense leg: per-file best distance, depth-cut, rank ascending
-            if index == "exact":
-                hits = (
-                    self._chunks()
-                    .filter(F.col("court_level") == target)
-                    .withColumn("dist", l2_distance(F.col("embedding"), q))
-                    .orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
-                    .limit(SEARCH_FETCH_K)
-                )
-            else:
-                hits = self._tier_candidates(index, version, target, qvec, q)
+            hits = self._hits(index, version, target, qvec, q)
             dense_rows = (
                 knn.dedup_best_per_group(
                     hits,
@@ -659,7 +583,7 @@ class SparkVectorService:
                     score_col="dist",
                     tiebreak_cols=("chunk_id",),
                 )
-                .orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
+                .orderBy(*_exprs().by_dist)
                 .limit(self._HYBRID_DEPTH)
                 .select("file_id", "file_name", F.round(F.col("dist"), 4).alias("dist"))
                 .collect()
@@ -786,11 +710,7 @@ class SparkVectorService:
                 for fid, score in order
             ],
         }
-        with self._cache_lock:
-            self.cache_misses += 1
-            if len(self._cache) >= self.search_cache_size:
-                self._cache.pop(next(iter(self._cache)))
-            self._cache[key] = copy.deepcopy(out)
+        self._remember(key, out)
         return out
 
     # -- ANN-tier candidate stages (round 10) --------------------------------
@@ -842,8 +762,9 @@ class SparkVectorService:
         with self._index_lock:
             if key in self._index_cache:
                 return self._index_cache[key]
-            lvl = self._chunks().filter(F.col("court_level") == target)
-            nodes = lvl.withColumn(
+            # built from the snapshot AT the keyed version: a head read
+            # here could file version v+1's rows under key v
+            nodes = self._level(version, target).withColumn(
                 "node_id",
                 F.row_number().over(Window.orderBy("chunk_id")) - 1,
             ).localCheckpoint()
@@ -977,12 +898,7 @@ class SparkVectorService:
 
         path = self._ensure_index(tier, version, target)
         if path is None:  # empty level — same empty frame as the exact path
-            return (
-                self._chunks()
-                .filter(F.col("court_level") == target)
-                .withColumn("dist", l2_distance(F.col("embedding"), q))
-                .limit(0)
-            )
+            return _with_dist(self._level(version, target), q).limit(0)
         spark = self.spark
         qdf = spark.createDataFrame(
             [([float(x) for x in qvec],)], "qvec array<double>"
@@ -1102,11 +1018,7 @@ class SparkVectorService:
             cand = nodes.join(
                 F.broadcast(beam.select("node_id")), "node_id", "left_semi"
             ).drop("node_id")
-        return (
-            cand.withColumn("dist", l2_distance(F.col("embedding"), q))
-            .orderBy(F.col("dist").asc(), F.col("chunk_id").asc())
-            .limit(SEARCH_FETCH_K)
-        )
+        return _with_dist(cand, q).orderBy(*_exprs().by_dist).limit(SEARCH_FETCH_K)
 
     # -- maintenance (manifested mode) ---------------------------------------
 
@@ -1196,12 +1108,58 @@ class SparkVectorService:
                 n = 0
         return {"status": "healthy", "chunks_indexed": n}
 
-    def _chunks(self) -> DataFrame:
+    def _chunks(self, version: int | None = None) -> DataFrame:
+        """Every chunk row: the manifest snapshot at `version` (the head
+        when None), or the raw parquet root."""
         if self.manifested:
             from pdf_parse_vector_db_spark.sources import manifest as M
 
-            _, df = M.snapshot(self.spark, self.path)
+            _, df = M.snapshot(self.spark, self.path, version)
             if df is None:  # parity with the raw path's missing-dir error
                 raise FileNotFoundError(f"empty manifested warehouse: {self.path}")
             return df
         return self.spark.read.parquet(self.path)
+
+    def _level(self, version: int, level: int) -> DataFrame:
+        """The chunk rows at court level `level` as of `version`, memoised
+        per (version, level) in manifested mode (see the memo invariants
+        in __init__). A late request at an older version gets its frame
+        unmemoised rather than evicting the newer head's."""
+        if not self.manifested:
+            return self._chunks().filter(F.col("court_level") == level)
+        key = (version, level)
+        with self._frame_lock:
+            df = self._frames.get(key)
+            if df is None:
+                df = self._chunks(version).filter(F.col("court_level") == level)
+                if all(v <= version for v, _ in self._frames):
+                    for stale in [k for k in self._frames if k[0] < version]:
+                        self._frames.pop(stale)
+                    self._frames[key] = df
+            return df
+
+
+#: candidate-stage tiers every search entry point routes through
+_TIERS = ("exact", "ivf", "graph", "bq", "sq8")
+
+
+@functools.cache
+def _exprs() -> SimpleNamespace:
+    """The request-independent search Columns, built once per process:
+    the L2 distance (two lambda higher-order functions), the (dist,
+    chunk_id) order and the rounded score. A Column is an immutable
+    unresolved expression and every plan using one is analysed afresh,
+    so concurrent requests share them; the query vector binds per
+    request as the literal column ``__q`` (see _with_dist)."""
+    return SimpleNamespace(
+        dist=l2_distance(F.col("embedding"), F.col("__q")),
+        by_dist=(F.col("dist").asc(), F.col("chunk_id").asc()),
+        score=F.round(F.col("dist"), 4),
+    )
+
+
+def _with_dist(df: DataFrame, q: Column) -> DataFrame:
+    """`df` + the query literal ``__q`` + its exact L2 ``dist``. The
+    optimizer folds the literal into the distance and prunes ``__q``
+    wherever a later projection leaves it unused."""
+    return df.withColumn("__q", q).withColumn("dist", _exprs().dist)

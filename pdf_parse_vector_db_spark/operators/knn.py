@@ -22,6 +22,7 @@ Spark-first restatement:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 import numpy as np
@@ -172,6 +173,18 @@ def mmr_rerank_groups(
     return cands.groupBy(group_col).applyInPandas(mmr, out_schema)
 
 
+@functools.cache
+def rank_in_group(
+    group_col: str, score_col: str, tiebreak_cols: tuple[str, ...] = ()
+) -> Column:
+    """row_number() over (group, score asc, tiebreaks asc). Built once per
+    signature: a Column is an immutable unresolved expression, and each
+    plan that uses it is analysed afresh, so serving requests share it
+    instead of rebuilding the window on the driver every call."""
+    order = [F.col(score_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
+    return F.row_number().over(Window.partitionBy(group_col).orderBy(*order))
+
+
 def dedup_best_per_group(
     hits: DataFrame,
     group_col: str = "file_id",
@@ -186,13 +199,8 @@ def dedup_best_per_group(
     map-side it is a partial sort of ≤fetch_k rows. Deterministic tiebreak
     columns make results stable under engine-dependent row order.
     """
-    order = [F.col(score_col).asc()] + [F.col(c).asc() for c in tiebreak_cols]
-    w = Window.partitionBy(group_col).orderBy(*order)
-    return (
-        hits.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    rn = rank_in_group(group_col, score_col, tuple(tiebreak_cols))
+    return hits.withColumn("__rn", rn).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def search_pipeline(
@@ -234,6 +242,47 @@ def win_statistics(results: DataFrame, decision_col: str = "case_decision") -> D
     )
 
 
+@functools.cache
+def _response_parts(
+    decision_col: str, score_col: str, id_col: str, name_col: str
+) -> tuple[Column, ...]:
+    """search_response's request-independent fields, built once per column
+    signature: the statistics, the sorted hits (a Python-lambda transform),
+    result_count and status. Only the query echo depends on the request."""
+    wins = F.count_if(F.col(decision_col) == DECISION_WON)
+    valid = F.count_if(F.col(decision_col).isin(*VALID_DECISIONS))
+    total = F.count(F.lit(1))
+    hit = F.struct(
+        F.col(score_col).alias("__score"),
+        F.struct(
+            F.col(decision_col).alias("case_decision"),
+            F.col(id_col).alias("file_id"),
+            F.col(name_col).alias("file_name"),
+            F.col(score_col).alias("score"),
+        ).alias("entity"),
+    )
+    hits_sorted = F.transform(
+        F.sort_array(F.collect_list(hit)), lambda h: h["entity"]
+    )
+    stats = F.struct(
+        (total - valid).alias("invalid_decisions"),
+        valid.alias("total_valid_decisions"),
+        wins.alias("win_count"),
+        F.round(
+            # ansi: the valid > 0 CASE arm guards the division
+            F.when(valid > 0, wins.cast("double") / valid.cast("double") * 100.0)
+            .otherwise(0.0),
+            2,
+        ).alias("win_percentage"),
+    )
+    return (
+        stats.alias("appellant_statistics"),
+        total.alias("result_count"),
+        hits_sorted.alias("results"),
+        F.lit("success").alias("status"),
+    )
+
+
 def search_response(
     results: DataFrame,
     query_file_name: str,
@@ -251,40 +300,13 @@ def search_response(
     Single aggregation: the hit structs collect sorted by ascending score
     (sort_array on a score-first struct), statistics ride in the same agg —
     no second pass, no driver-side assembly beyond the 1-row collect."""
-    wins = F.count_if(F.col(decision_col) == DECISION_WON)
-    valid = F.count_if(F.col(decision_col).isin(*VALID_DECISIONS))
-    total = F.count(F.lit(1))
-    hit = F.struct(
-        F.col(score_col).alias("__score"),
-        F.struct(
-            F.col(decision_col).alias("case_decision"),
-            F.col(id_col).alias("file_id"),
-            F.col(name_col).alias("file_name"),
-            F.col(score_col).alias("score"),
-        ).alias("entity"),
+    stats, result_count, hits, status = _response_parts(
+        decision_col, score_col, id_col, name_col
     )
-    hits_sorted = F.transform(
-        F.sort_array(F.collect_list(hit)), lambda h: h["entity"]
-    )
-    response = F.struct(
-        F.struct(
-            (total - valid).alias("invalid_decisions"),
-            valid.alias("total_valid_decisions"),
-            wins.alias("win_count"),
-            F.round(
-                # ansi: the valid > 0 CASE arm guards the division
-                F.when(valid > 0, wins.cast("double") / valid.cast("double") * 100.0)
-                .otherwise(0.0),
-                2,
-            ).alias("win_percentage"),
-        ).alias("appellant_statistics"),
-        F.struct(
-            F.lit(query_file_name).alias("file_name"),
-            F.lit(int(input_court_level)).alias("input_court_level"),
-            F.lit(int(input_court_level) + 1).alias("target_court_level"),
-        ).alias("query"),
-        total.alias("result_count"),
-        hits_sorted.alias("results"),
-        F.lit("success").alias("status"),
-    )
+    echo = F.struct(
+        F.lit(query_file_name).alias("file_name"),
+        F.lit(int(input_court_level)).alias("input_court_level"),
+        F.lit(int(input_court_level) + 1).alias("target_court_level"),
+    ).alias("query")
+    response = F.struct(stats, echo, result_count, hits, status)
     return results.agg(F.to_json(response).alias("response"))

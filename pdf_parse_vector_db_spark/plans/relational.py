@@ -1214,12 +1214,15 @@ def ndv_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange carries distinct pairs, not rows — and the percentile leg
     # runs Expand-free. count(DISTINCT) ignores NULLs, hence the filter;
     # an all-NULL group would drop from the leg, hence the left join +
-    # coalesce(0). Values identical (exactness is the query's contract).
+    # coalesce(0). GROUP BY keeps a NULL event_type as a group of its own,
+    # so the join is null-safe: plain equality never matches NULL and
+    # would give that group exact_ndv = 0. Values identical (exactness is
+    # the query's contract).
     ndv = (
         ev.filter(F.col("user_id").isNotNull())
-        .select("event_type", "user_id")
+        .select(F.col("event_type").alias("__et"), "user_id")
         .distinct()
-        .groupBy("event_type")
+        .groupBy("__et")
         .agg(F.count(F.lit(1)).alias("exact_ndv"))
     )
     out = (
@@ -1229,7 +1232,7 @@ def ndv_sketch_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.expr("percentile(value, 0.5)"), 4).alias("exact_p50_value"),
             F.round(F.expr("approx_percentile(value, 0.5, 10000)"), 4).alias("sketch_p50_value"),
         )
-        .join(ndv, on="event_type", how="left")
+        .join(ndv, F.col("event_type").eqNullSafe(F.col("__et")), how="left")
         .withColumn(
             "exact_ndv", F.coalesce(F.col("exact_ndv"), F.lit(0).cast("bigint"))
         )

@@ -452,3 +452,102 @@ def test_grouping_search_facade(spark, tmp_path):
     # the repeated-text doc has >= 2 chunks tied at the top: group_size
     # must surface both, not collapse to the best-per-file single hit
     assert len(groups[0]["hits"]) == 2
+
+
+def test_frame_memo_survives_foreign_compaction_and_vacuum(spark, tmp_path):
+    """A memoised snapshot frame never outlives its version: after another
+    instance ingests, compacts every live commit into one and vacuums the
+    replaced commit dirs, our next search (new text, new head) finds the
+    foreign file and reads none of the deleted files."""
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    path = str(tmp_path / "wh")
+    ours = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    theirs = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(3):
+        ours.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    first = ours.search_similar_cases("query.pdf", QUERY, court_level=2)
+    assert first["result_count"] == 3
+    assert any(v == M.head_version(spark, path) for v, _ in ours._frames)
+
+    theirs.ingest_legal_document("case_new.pdf", QUERY, court_level=3)
+    M.maybe_compact(spark, path, max_live_commits=1, partition_by=("court_level",),
+                    stats_cols=("file_id",))
+    assert M.vacuum(spark, path, keep_versions=1, min_age_s=0) > 0
+
+    resp = ours.search_similar_cases("query.pdf", QUERY + " again", court_level=2)
+    assert resp["result_count"] == 4
+    assert resp["results"][0]["file_name"] == "case_new.pdf"
+    assert {v for v, _ in ours._frames} == {M.head_version(spark, path)}
+
+
+def test_snapshot_read_once_per_version(spark, tmp_path, monkeypatch):
+    """Uncached searches at one manifest version share one snapshot read;
+    an ingest publishes a new version and costs exactly one more."""
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    path = str(tmp_path / "wh")
+    svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(2):
+        svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    calls = []
+    real = M.snapshot
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(M, "snapshot", counting)
+    svc._frames.clear()
+    misses = svc.cache_misses
+    for i in range(4):
+        svc.search_similar_cases("query.pdf", QUERY + f" {i}", court_level=2)
+    assert svc.cache_misses == misses + 4
+    assert len(calls) == 1
+    svc.ingest_legal_document("case_2.pdf", DOC + " variant 2", court_level=3)
+    for i in range(4):
+        r = svc.search_similar_cases("query.pdf", QUERY + f" {i}", court_level=2)
+        assert r["result_count"] == 3
+    assert len(calls) == 2
+
+
+def test_commit_between_reads_keeps_old_key(spark, tmp_path, monkeypatch):
+    """One head read per request: a foreign commit landing right after a
+    search read the head must not put the new version's rows into what is
+    stored under the old version's key — neither the cached response nor
+    the tier index artifact."""
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    path = str(tmp_path / "wh")
+    ours = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    theirs = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(3):
+        ours.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    real = M.head_version
+    pending = ["case_x.pdf", "case_y.pdf"]
+
+    def racing_head(spark_, table):
+        v = real(spark_, table)
+        if pending:
+            # a foreign commit lands between the search's head read and
+            # everything it reads after it
+            name = pending.pop(0)
+            monkeypatch.setattr(M, "head_version", real)
+            theirs.ingest_legal_document(name, QUERY, court_level=3)
+            monkeypatch.setattr(M, "head_version", racing_head)
+        return v
+
+    v0 = real(spark, path)
+    monkeypatch.setattr(M, "head_version", racing_head)
+    # exact reads v0 while case_x lands; bq reads v0 + 1 while case_y lands
+    originals = {f"case_{i}.pdf" for i in range(3)}
+    for tier, want in (("exact", originals), ("bq", originals | {"case_x.pdf"})):
+        resp = ours.search_similar_cases("query.pdf", QUERY, court_level=2, index=tier)
+        assert {h["file_name"] for h in resp["results"]} == want, tier
+    stored = [out for key, out in ours._cache.items() if key[4] == v0]
+    assert len(stored) == 1 and stored[0]["result_count"] == 3
+    idx = spark.read.parquet(ours._index_cache[("bq", v0 + 1, 3)])
+    assert "case_y.pdf" not in {r.file_name for r in idx.select("file_name").collect()}
+    monkeypatch.setattr(M, "head_version", real)
+    resp = ours.search_similar_cases("query.pdf", QUERY, court_level=2)
+    assert resp["result_count"] == 5

@@ -119,6 +119,26 @@ def test_ndv_sketch_error_bound(spark):
         assert abs(r.sp50 - r.p50) <= max(0.01, 0.01 * abs(r.p50)), r
 
 
+def test_ndv_sketch_null_event_type_group(spark, tmp_path):
+    """A NULL event_type is a group of its own (GROUP BY semantics, as in
+    the DuckDB twin): its exact NDV is its real distinct-user count, not
+    the 0 a plain-equality join back to the NDV leg gave it."""
+    from pdf_parse_vector_db_spark.plans.relational import ndv_sketch_accuracy
+
+    rows = [
+        (i, i % 5, None if i % 2 else "click", float(i), "{}") for i in range(20)
+    ]
+    spark.createDataFrame(
+        rows, "event_id long, user_id long, event_type string, value double, props string"
+    ).withColumn("ts", F.timestamp_seconds(F.col("event_id"))).write.parquet(
+        str(tmp_path / "events.parquet")
+    )
+    got = {r.event_type: r for r in ndv_sketch_accuracy(spark, str(tmp_path)).collect()}
+    assert set(got) == {None, "click"}
+    assert got[None].exact_ndv == 5 and got["click"].exact_ndv == 5
+    assert got[None].ndv_within_bound and got["click"].ndv_within_bound
+
+
 @given(
     st.lists(st.sampled_from("abcdefghij"), min_size=1, max_size=400),
     st.integers(min_value=2, max_value=20),
