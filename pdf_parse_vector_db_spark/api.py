@@ -27,7 +27,6 @@ from __future__ import annotations
 import copy
 import functools
 import hashlib
-import json
 import threading
 from types import SimpleNamespace
 
@@ -227,7 +226,9 @@ class SparkVectorService:
 
     # -- read path ---------------------------------------------------------
 
-    def _request(self, text: str, court_level: int, index: str) -> tuple[int, int]:
+    def _request(
+        self, text: str, court_level: int, index: str, top_k: int = 0
+    ) -> tuple[int, int]:
         """Shared request validation plus the request's ONE version read;
         returns (version, target court level).
 
@@ -244,6 +245,8 @@ class SparkVectorService:
             raise ValueError("index must be one of: " + ", ".join(_TIERS))
         if not text or not text.strip():
             raise ValueError("No text could be extracted from the PDF")
+        if top_k < 0:
+            raise ValueError("top_k must be >= 0")
         if self.manifested:
             from pdf_parse_vector_db_spark.sources import manifest as M
 
@@ -291,36 +294,23 @@ class SparkVectorService:
             # store our own private copy for the same reason as the hit path
             self._cache[key] = copy.deepcopy(out)
 
-    def _hits(self, index: str, version: int, target: int, qvec: list, q: Column):
-        """The candidate stage every entry point shares: ≤ SEARCH_FETCH_K
-        chunk rows + exact ``dist`` at `version`, through the chosen tier
-        (exact = brute force over the level's memoised frame)."""
+    def _candidates(
+        self, index: str, version: int, target: int, qvec: list, q: Column
+    ) -> list:
+        """The Spark part of every fetch_k-bounded search: the ≤
+        SEARCH_FETCH_K nearest chunks at `version` through the chosen tier
+        (exact = brute force over the level's memoised frame), collected
+        as _exprs().hit_cols rows in ascending (dist, chunk_id) order.
+        The plan ends at the top-k: scan → L2 → TakeOrderedAndProject."""
         if index != "exact":
-            return self._tier_candidates(index, version, target, qvec, q)
-        return (
-            _with_dist(self._level(version, target), q)
-            .orderBy(*_exprs().by_dist)
-            .limit(SEARCH_FETCH_K)
-        )
-
-    @staticmethod
-    def _ranked(hits: DataFrame) -> list[dict]:
-        """Best chunk per file in ascending (dist, chunk_id) order."""
-        best = knn.dedup_best_per_group(
-            hits, group_col="file_id", score_col="dist", tiebreak_cols=("chunk_id",)
-        )
-        rows = (
-            best.orderBy(*_exprs().by_dist)
-            .select(
-                "chunk_id",
-                "file_id",
-                "file_name",
-                "case_decision",
-                _exprs().score.alias("score"),
+            hits = self._tier_candidates(index, version, target, qvec, q)
+        else:
+            hits = (
+                _with_dist(self._level(version, target), q)
+                .orderBy(*_exprs().by_dist)
+                .limit(SEARCH_FETCH_K)
             )
-            .collect()
-        )
-        return [r.asDict() for r in rows]
+        return hits.select(*_exprs().hit_cols).collect()
 
     def search_similar_cases(
         self,
@@ -333,6 +323,15 @@ class SparkVectorService:
         """First-chunk embed → candidate stage at the target level →
         best-per-file dedup → ascending top-k → stats → nested response
         (golden shape README.md:17-65).
+
+        Only the candidate stage is a Spark job; the dedup, top-k cut,
+        statistics and response run on the driver over its ≤ fetch_k
+        collected rows (knn.search_response_rows), where the reference
+        runs them too (Python after the Milvus call,
+        extract_and_search.py:113-126). That tail is O(fetch_k) whatever
+        the corpus size, so a window, two aggregates and to_json in the
+        plan only added analysis, planning and codegen per request;
+        knn.search_response is the Spark form it is tested against.
 
         `index` routes the CANDIDATE stage (round-9 verdict missing #2:
         the tiers existed as standalone operators with no product call
@@ -359,7 +358,7 @@ class SparkVectorService:
         tail, so the golden shape is tier-independent; recall vs exact
         is pinned in tests/test_api.py. Responses cache per (query,
         version, tier)."""
-        version, target = self._request(text, court_level, index)
+        version, target = self._request(text, court_level, index, top_k)
         key = (
             hashlib.sha256(text.encode()).hexdigest(),
             file_name,
@@ -373,19 +372,8 @@ class SparkVectorService:
             return out
         qvec, q = self._embed(text)
         with scoped_pool(self.spark, "search"):
-            best = knn.dedup_best_per_group(
-                self._hits(index, version, target, qvec, q),
-                group_col="file_id",
-                score_col="dist",
-                tiebreak_cols=("chunk_id",),
-            )
-            top = (
-                best.orderBy(*_exprs().by_dist)
-                .limit(top_k)
-                .withColumn("score", _exprs().score)
-            )
-            resp = knn.search_response(top, file_name, int(court_level))
-            out = json.loads(resp.collect()[0][0])
+            rows = self._candidates(index, version, target, qvec, q)
+        out = knn.search_response_rows(rows, file_name, court_level, int(top_k))
         self._remember(key, out)
         return out
 
@@ -422,7 +410,12 @@ class SparkVectorService:
                 hits = _with_dist(self._level(version, target), q).filter(band)
             else:
                 hits = self._tier_candidates(index, version, target, qvec, q).filter(band)
-            return self._ranked(hits)
+            # the exact band is not bounded by fetch_k: dedup stays in Spark
+            best = knn.dedup_best_per_group(
+                hits, group_col="file_id", score_col="dist", tiebreak_cols=("chunk_id",)
+            )
+            rows = best.orderBy(*_exprs().by_dist).select(*_exprs().hit_cols).collect()
+        return [r.asDict() for r in rows]
 
     def search_iterator(
         self,
@@ -436,8 +429,9 @@ class SparkVectorService:
         ascending-distance order), pymilvus `search_iterator(
         batch_size=...)`'s next()/close() loop.
 
-        Spark shape: ONE bounded job materialises the deduped ranking at
-        the over-fetch width (SEARCH_FETCH_K), then pages slice locally —
+        Spark shape: ONE bounded job collects the candidate stage at the
+        over-fetch width (SEARCH_FETCH_K), deduped per file on the driver
+        like search_similar_cases, then pages slice locally —
         a page fetch must not re-run a cluster job, and deep paging past
         the over-fetch width is an explicit iterator exhaustion (Milvus
         iterators likewise page within the engine's reduced result set)."""
@@ -446,7 +440,8 @@ class SparkVectorService:
         version, target = self._request(text, court_level, index)
         qvec, q = self._embed(text)
         with scoped_pool(self.spark, "search"):
-            ranked = self._ranked(self._hits(index, version, target, qvec, q))
+            rows = self._candidates(index, version, target, qvec, q)
+        ranked = [hits[0].asDict() for hits in knn.best_per_file(rows)]
 
         def pages():
             for i in range(0, len(ranked), batch_size):
@@ -471,47 +466,32 @@ class SparkVectorService:
         the caller still sees intra-file evidence.
 
         Spark shape: the tier's over-fetch candidates (bounded at
-        SEARCH_FETCH_K) get a per-file rank window — WindowGroupLimit
-        cuts to group_size under the sort — and the group ranking runs
-        over one-row-per-file bests; everything after the candidate
-        stage is ≤ fetch_k rows."""
+        SEARCH_FETCH_K) are the only job; the per-file ranks up to
+        group_size and the group ranking run on the driver over those
+        ≤ fetch_k rows (knn.best_per_file)."""
         if limit < 1 or group_size < 1:
             raise ValueError("limit and group_size must be >= 1")
         version, target = self._request(text, court_level, index)
         qvec, q = self._embed(text)
         with scoped_pool(self.spark, "search"):
-            hits = self._hits(index, version, target, qvec, q)
-            per = hits.withColumn(
-                "hit_rank", knn.rank_in_group("file_id", "dist", ("chunk_id",))
-            ).filter(F.col("hit_rank") <= int(group_size))
-            rows = (
-                per.select(
-                    "file_id",
-                    "file_name",
-                    "chunk_id",
-                    "hit_rank",
-                    _exprs().score.alias("score"),
-                )
-                .orderBy(F.col("score").asc(), F.col("chunk_id").asc())
-                .collect()
-            )
-        # group assembly over <= fetch_k local rows
-        groups: dict[str, dict] = {}
-        for r in rows:
-            g = groups.setdefault(
-                r.file_id,
-                {"file_id": r.file_id, "file_name": r.file_name, "hits": []},
-            )
-            g["hits"].append(
-                {"chunk_id": r.chunk_id, "hit_rank": r.hit_rank, "score": r.score}
-            )
+            rows = self._candidates(index, version, target, qvec, q)
+        groups = [
+            {
+                "file_id": hits[0].file_id,
+                "file_name": hits[0].file_name,
+                "hits": [
+                    {"chunk_id": r.chunk_id, "hit_rank": i + 1, "score": r.score}
+                    for i, r in enumerate(hits)
+                ],
+            }
+            for hits in knn.best_per_file(rows, int(group_size))
+        ]
+        # groups rank by their lowest (4-dp score, chunk_id) hit
         ranked = sorted(
-            groups.values(),
-            key=lambda g: (g["hits"][0]["score"], g["hits"][0]["chunk_id"]),
+            groups, key=lambda g: min((h["score"], h["chunk_id"]) for h in g["hits"])
         )[: int(limit)]
         for i, g in enumerate(ranked):
             g["grp_rank"] = i + 1
-            g["hits"].sort(key=lambda h: h["hit_rank"])
         return ranked
 
     #: hybrid_search geometry: per-leg retrieval depth and the BM25
@@ -542,12 +522,14 @@ class SparkVectorService:
         first) — the two pymilvus rankers. Each leg covers the other's
         blind spot: exact identifiers / rare terms vs paraphrase.
 
-        Plan shape: both legs end in TakeOrdered cuts before any window;
-        the fusion joins two ≤depth per-file sides. Responses cache per
-        (query, version, tier, ranker, weights) like every search."""
+        Plan shape: the dense leg is the candidate stage, deduped per
+        file on the driver; the lexical leg ends in a TakeOrdered cut;
+        the fusion joins two ≤depth per-file lists on the driver.
+        Responses cache per (query, version, tier, ranker, weights) like
+        every search."""
         if ranker not in ("rrf", "weighted"):
             raise ValueError("ranker must be one of: rrf, weighted")
-        version, target = self._request(text, court_level, index)
+        version, target = self._request(text, court_level, index, top_k)
         key = (
             "hybrid",
             hashlib.sha256(text.encode()).hexdigest(),
@@ -575,19 +557,9 @@ class SparkVectorService:
 
         with scoped_pool(self.spark, "search"):
             # dense leg: per-file best distance, depth-cut, rank ascending
-            hits = self._hits(index, version, target, qvec, q)
-            dense_rows = (
-                knn.dedup_best_per_group(
-                    hits,
-                    group_col="file_id",
-                    score_col="dist",
-                    tiebreak_cols=("chunk_id",),
-                )
-                .orderBy(*_exprs().by_dist)
-                .limit(self._HYBRID_DEPTH)
-                .select("file_id", "file_name", F.round(F.col("dist"), 4).alias("dist"))
-                .collect()
-            )
+            rows = self._candidates(index, version, target, qvec, q)
+            best = [hits[0] for hits in knn.best_per_file(rows)]
+            dense_rows = best[: self._HYBRID_DEPTH]
 
             # lexical leg: BM25 served from the per-(version, level)
             # POSTINGS artifact (tier "lex" in _ensure_index — tokenized
@@ -683,7 +655,7 @@ class SparkVectorService:
                     out[r.file_id] = n if higher_better else 1.0 - n
                 return out
 
-            for fid, nv in _norms(dense_rows, "dist", higher_better=False).items():
+            for fid, nv in _norms(dense_rows, "score", higher_better=False).items():
                 fused[fid] = fused.get(fid, 0.0) + wd * nv
             for fid, nv in _norms(lex_rows, "bm25", higher_better=True).items():
                 fused[fid] = fused.get(fid, 0.0) + wl * nv
@@ -1147,14 +1119,21 @@ _TIERS = ("exact", "ivf", "graph", "bq", "sq8")
 def _exprs() -> SimpleNamespace:
     """The request-independent search Columns, built once per process:
     the L2 distance (two lambda higher-order functions), the (dist,
-    chunk_id) order and the rounded score. A Column is an immutable
-    unresolved expression and every plan using one is analysed afresh,
-    so concurrent requests share them; the query vector binds per
-    request as the literal column ``__q`` (see _with_dist)."""
+    chunk_id) order and the columns a search collects per hit, with the
+    4-dp score. A Column is an immutable unresolved expression and every
+    plan using one is analysed afresh, so concurrent requests share them;
+    the query vector binds per request as the literal column ``__q`` (see
+    _with_dist)."""
     return SimpleNamespace(
         dist=l2_distance(F.col("embedding"), F.col("__q")),
         by_dist=(F.col("dist").asc(), F.col("chunk_id").asc()),
-        score=F.round(F.col("dist"), 4),
+        hit_cols=(
+            "chunk_id",
+            "file_id",
+            "file_name",
+            "case_decision",
+            F.round(F.col("dist"), 4).alias("score"),
+        ),
     )
 
 

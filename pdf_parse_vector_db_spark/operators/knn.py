@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import functools
 from collections.abc import Sequence
+from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np
 import pandas as pd
@@ -242,47 +243,6 @@ def win_statistics(results: DataFrame, decision_col: str = "case_decision") -> D
     )
 
 
-@functools.cache
-def _response_parts(
-    decision_col: str, score_col: str, id_col: str, name_col: str
-) -> tuple[Column, ...]:
-    """search_response's request-independent fields, built once per column
-    signature: the statistics, the sorted hits (a Python-lambda transform),
-    result_count and status. Only the query echo depends on the request."""
-    wins = F.count_if(F.col(decision_col) == DECISION_WON)
-    valid = F.count_if(F.col(decision_col).isin(*VALID_DECISIONS))
-    total = F.count(F.lit(1))
-    hit = F.struct(
-        F.col(score_col).alias("__score"),
-        F.struct(
-            F.col(decision_col).alias("case_decision"),
-            F.col(id_col).alias("file_id"),
-            F.col(name_col).alias("file_name"),
-            F.col(score_col).alias("score"),
-        ).alias("entity"),
-    )
-    hits_sorted = F.transform(
-        F.sort_array(F.collect_list(hit)), lambda h: h["entity"]
-    )
-    stats = F.struct(
-        (total - valid).alias("invalid_decisions"),
-        valid.alias("total_valid_decisions"),
-        wins.alias("win_count"),
-        F.round(
-            # ansi: the valid > 0 CASE arm guards the division
-            F.when(valid > 0, wins.cast("double") / valid.cast("double") * 100.0)
-            .otherwise(0.0),
-            2,
-        ).alias("win_percentage"),
-    )
-    return (
-        stats.alias("appellant_statistics"),
-        total.alias("result_count"),
-        hits_sorted.alias("results"),
-        F.lit("success").alias("status"),
-    )
-
-
 def search_response(
     results: DataFrame,
     query_file_name: str,
@@ -299,14 +259,117 @@ def search_response(
 
     Single aggregation: the hit structs collect sorted by ascending score
     (sort_array on a score-first struct), statistics ride in the same agg —
-    no second pass, no driver-side assembly beyond the 1-row collect."""
-    stats, result_count, hits, status = _response_parts(
-        decision_col, score_col, id_col, name_col
+    no second pass, no driver-side assembly beyond the 1-row collect.
+    The serving facade builds the same dict on the driver from ≤ fetch_k
+    rows (search_response_rows); this plan is its reference."""
+    wins = F.count_if(F.col(decision_col) == DECISION_WON)
+    valid = F.count_if(F.col(decision_col).isin(*VALID_DECISIONS))
+    total = F.count(F.lit(1))
+    hit = F.struct(
+        F.col(score_col).alias("__score"),
+        F.struct(
+            F.col(decision_col).alias("case_decision"),
+            F.col(id_col).alias("file_id"),
+            F.col(name_col).alias("file_name"),
+            F.col(score_col).alias("score"),
+        ).alias("entity"),
+    )
+    hits = F.transform(F.sort_array(F.collect_list(hit)), lambda h: h["entity"])
+    stats = F.struct(
+        (total - valid).alias("invalid_decisions"),
+        valid.alias("total_valid_decisions"),
+        wins.alias("win_count"),
+        F.round(
+            # ansi: the valid > 0 CASE arm guards the division
+            F.when(valid > 0, wins.cast("double") / valid.cast("double") * 100.0)
+            .otherwise(0.0),
+            2,
+        ).alias("win_percentage"),
     )
     echo = F.struct(
         F.lit(query_file_name).alias("file_name"),
         F.lit(int(input_court_level)).alias("input_court_level"),
         F.lit(int(input_court_level) + 1).alias("target_court_level"),
     ).alias("query")
-    response = F.struct(stats, echo, result_count, hits, status)
+    response = F.struct(
+        stats.alias("appellant_statistics"),
+        echo,
+        total.alias("result_count"),
+        hits.alias("results"),
+        F.lit("success").alias("status"),
+    )
     return results.agg(F.to_json(response).alias("response"))
+
+
+# -- driver-side tail over a collected candidate set ---------------------------
+#
+# The serving facade's searches are bounded by SEARCH_FETCH_K: once the
+# Spark plan has produced the ≤ fetch_k nearest candidates, everything the
+# reference does after its Milvus call (extract_and_search.py:113-126,
+# extract_and_search_v2.py:161-170) is Python over ≤ 100 rows. These
+# helpers are that tail; dedup_best_per_group and search_response above
+# are their Spark reference (tests/test_golden.py pins the equality).
+
+
+def best_per_file(rows: Sequence, group_size: int = 1) -> list[list]:
+    """Each file's first `group_size` rows, files in order of their first
+    row. `rows` must arrive in ascending (dist, chunk_id) order, so first
+    = best — the reference's first-hit-per-file dedup (comment "Use the
+    best score", extract_and_search.py:125) and, for group_size > 1,
+    dedup_best_per_group's row_number ≤ group_size."""
+    files: dict = {}
+    for r in rows:
+        hits = files.setdefault(r.file_id, [])
+        if len(hits) < group_size:
+            hits.append(r)
+    return list(files.values())
+
+
+def _spark_round(x: float, scale: int) -> float:
+    """Spark's ``round(DOUBLE, scale)``: HALF_UP on the double's decimal
+    string (BigDecimal.valueOf), where Python's round() works on the
+    binary value half-to-even (3.125 → 3.13 here, 3.12 there)."""
+    q = Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), rounding=ROUND_HALF_UP)
+    return float(q)
+
+
+def _nulls_first(v) -> tuple:
+    return (0,) if v is None else (1, v)
+
+
+def search_response_rows(
+    rows: Sequence, query_file_name: str, input_court_level: int, top_k: int
+) -> dict:
+    """search_response's dict (json.loads of its JSON) from candidate rows
+    — chunk_id, file_id, file_name, case_decision and the 4-dp `score`, in
+    ascending (dist, chunk_id) order: best per file → first `top_k` files
+    → win statistics. Hits order as sort_array orders the score-first
+    hit struct (score, then the entity's fields, nulls first), and a NULL
+    field is absent, as to_json drops it."""
+    top = [hits[0] for hits in best_per_file(rows)][:top_k]
+    decisions = [r.case_decision for r in top]
+    wins = decisions.count(DECISION_WON)
+    valid = sum(d in VALID_DECISIONS for d in decisions)
+    entities = [(r.case_decision, r.file_id, r.file_name, r.score) for r in top]
+    entities.sort(key=lambda e: (_nulls_first(e[3]), *map(_nulls_first, e)))
+    keys = ("case_decision", "file_id", "file_name", "score")
+    echo = {
+        "file_name": query_file_name,
+        "input_court_level": int(input_court_level),
+        "target_court_level": int(input_court_level) + 1,
+    }
+    return {
+        "appellant_statistics": {
+            "invalid_decisions": len(top) - valid,
+            "total_valid_decisions": valid,
+            "win_count": wins,
+            # ansi: driver-side python; the `if valid` arm guards the division
+            "win_percentage": _spark_round(wins / valid * 100.0, 2) if valid else 0.0,
+        },
+        "query": {k: v for k, v in echo.items() if v is not None},
+        "result_count": len(top),
+        "results": [
+            {k: v for k, v in zip(keys, e) if v is not None} for e in entities
+        ],
+        "status": "success",
+    }

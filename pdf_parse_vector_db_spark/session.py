@@ -58,7 +58,8 @@ def install_reliable_checkpoint_switch() -> None:
     ``DataFrame.checkpoint`` into that directory — same plans, same
     results (pinned by tests/test_components.py), node-loss-safe. Unset
     (the default, and the bench posture), behavior is byte-identical to
-    stock ``localCheckpoint``.
+    stock ``localCheckpoint``. The shim keeps its signature; in reliable
+    mode ``storageLevel`` is ignored (the blocks go to the directory).
 
     One shim instead of 60+ call-site edits: the cut is POLICY, not
     per-operator logic, so it is installed once at the session factory.
@@ -76,14 +77,19 @@ def install_reliable_checkpoint_switch() -> None:
         return
     orig = DataFrame.localCheckpoint
 
-    def _local_checkpoint(self, eager: bool = True):
+    def _local_checkpoint(self, eager: bool = True, storageLevel=None):
         sess = self.sparkSession
         cdir = sess.conf.get(RELIABLE_CHECKPOINT_DIR_CONF, None)
         if not cdir:
-            return orig(self, eager=eager)
+            return orig(self, eager=eager, storageLevel=storageLevel)
         sc = sess.sparkContext
-        if sc.getCheckpointDir() != cdir:
+        # setCheckpointDir makes a fresh <cdir>/<uuid> each call, and
+        # getCheckpointDir returns that subdirectory, not cdir: remember
+        # which conf value produced the current dir and set it only when
+        # either has changed
+        if getattr(sc, "_pdfparse_ckpt", None) != (cdir, sc.getCheckpointDir()):
             sc.setCheckpointDir(cdir)
+            sc._pdfparse_ckpt = (cdir, sc.getCheckpointDir())
         return self.checkpoint(eager=eager)
 
     _local_checkpoint.__doc__ = orig.__doc__

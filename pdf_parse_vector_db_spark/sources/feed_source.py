@@ -281,7 +281,7 @@ def _py_commit_append(
     root = _local(table)
     mdir = os.path.join(root, _MANIFESTS)
     os.makedirs(mdir, exist_ok=True)
-    for _ in range(20):
+    for attempt in range(20):
         head = _head_version(table)
         prev = (
             _read_manifest(table, head)
@@ -329,6 +329,12 @@ def _py_commit_append(
                     os.remove(claim)
                 except FileNotFoundError:
                     pass
+            else:
+                # a live claimant is mid-publish (a JVM writer spends
+                # several gateway round trips between claim and link):
+                # wait for it, or this loop's 20 re-reads of the same
+                # head finish in a few ms and fail with nothing published
+                _time.sleep(0.005 * (attempt + 1))
             continue  # re-read the head and retry
         try:
             dst = os.path.join(mdir, f"v{head + 1}.json")

@@ -551,3 +551,58 @@ def test_commit_between_reads_keeps_old_key(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(M, "head_version", real)
     resp = ours.search_similar_cases("query.pdf", QUERY, court_level=2)
     assert resp["result_count"] == 5
+
+
+def test_negative_top_k_is_a_validation_error(svc):
+    """A negative top_k is a 400-class ValueError on every entry point that
+    takes one, raised before any Spark work; top_k=0 stays the empty
+    success response."""
+    svc.ingest_legal_document("case_n.pdf", DOC, court_level=3)
+    with pytest.raises(ValueError, match="top_k"):
+        svc.search_similar_cases("query.pdf", QUERY, court_level=2, top_k=-1)
+    with pytest.raises(ValueError, match="top_k"):
+        svc.hybrid_search("query.pdf", QUERY, court_level=2, top_k=-1)
+    resp = svc.search_similar_cases("query.pdf", QUERY, court_level=2, top_k=0)
+    assert resp["status"] == "success"
+    assert resp["result_count"] == 0 and resp["results"] == []
+    assert resp["appellant_statistics"] == {
+        "invalid_decisions": 0,
+        "total_valid_decisions": 0,
+        "win_count": 0,
+        "win_percentage": 0.0,
+    }
+
+
+def test_uncached_search_is_one_single_stage_job(spark, tmp_path):
+    """The Spark plan of a search ends at the candidate stage (scan → L2 →
+    top-fetch_k): an uncached exact search runs one job of one stage, and
+    its plan holds no window or aggregate — the per-file dedup, top-k
+    and statistics run on the driver over the collected candidates."""
+    path = str(tmp_path / "wh")
+    svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(3):
+        svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    svc.search_similar_cases("query.pdf", QUERY, court_level=2)  # memoise the frame
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    sc.setJobGroup("one-search", "uncached exact search")
+    try:
+        resp = svc.search_similar_cases("query.pdf", QUERY + " again", court_level=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert resp["result_count"] == 3
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    (job,) = [int(j) for j in sc.statusTracker().getJobIdsForGroup("one-search")]
+    data = jsc.statusStore().job(job)
+    assert data.numCompletedStages() == 1 and data.numSkippedStages() == 0
+    sql = spark._jsparkSession.sharedState().statusStore()
+    execs = sql.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(execs.size())
+        if execs.apply(i).jobs().contains(job)
+    ]
+    assert len(plans) == 1 and "TakeOrderedAndProject" in plans[0]
+    for node in ("Window", "Aggregate"):
+        assert node not in plans[0], node

@@ -140,3 +140,49 @@ def test_reliable_checkpoint_switch_same_results(spark, tmp_path):
     assert os.path.isdir(cdir) and any(os.scandir(cdir))
     # and with the conf unset again, stock localCheckpoint still works
     assert _resolve(spark, pairs) == base
+
+
+def test_reliable_checkpoint_dir_set_once_per_conf_value(spark, tmp_path):
+    """setCheckpointDir makes a new <dir>/<uuid> subdirectory per call and
+    getCheckpointDir reports that subdirectory, so the shim must remember
+    the conf value it set: three lineage cuts share one subdirectory, and
+    a new conf value moves them to a new one."""
+    import os
+
+    from pdf_parse_vector_db_spark.session import RELIABLE_CHECKPOINT_DIR_CONF
+
+    df = spark.range(10)
+    cdir = str(tmp_path / "ckpt_once")
+    spark.conf.set(RELIABLE_CHECKPOINT_DIR_CONF, cdir)
+    try:
+        for _ in range(3):
+            assert df.localCheckpoint().count() == 10
+        assert len(os.listdir(cdir)) == 1
+        other = str(tmp_path / "ckpt_other")
+        spark.conf.set(RELIABLE_CHECKPOINT_DIR_CONF, other)
+        df.localCheckpoint().count()
+        assert len(os.listdir(other)) == 1
+        assert spark.sparkContext.getCheckpointDir().startswith(
+            "file:" + other + "/"
+        )
+    finally:
+        spark.conf.unset(RELIABLE_CHECKPOINT_DIR_CONF)
+
+
+def test_local_checkpoint_shim_keeps_storage_level(spark, tmp_path):
+    """The shim keeps DataFrame.localCheckpoint's signature: storageLevel
+    is forwarded to the stock cut, and accepted (and ignored) in reliable
+    mode."""
+    from pyspark import StorageLevel
+
+    from pdf_parse_vector_db_spark.session import RELIABLE_CHECKPOINT_DIR_CONF
+
+    df = spark.range(5)
+    cut = df.localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
+    assert cut.count() == 5
+    spark.conf.set(RELIABLE_CHECKPOINT_DIR_CONF, str(tmp_path / "ckpt_sl"))
+    try:
+        cut = df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+        assert cut.count() == 5
+    finally:
+        spark.conf.unset(RELIABLE_CHECKPOINT_DIR_CONF)

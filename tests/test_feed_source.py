@@ -214,6 +214,40 @@ def test_python_and_jvm_writers_race_safely(spark, tmp_path):
     assert M.snapshot(spark, t)[1].count() == 5 + 2 + 2
 
 
+def test_python_sink_waits_out_a_live_claim(spark, tmp_path):
+    """A claim held by a writer that is still publishing is not a lost
+    race: the Python sink must wait for that version to land and commit
+    the next one, not burn its 20 retries re-reading the same head."""
+    import json
+    import os
+    import threading
+
+    from pdf_parse_vector_db_spark.sources.feed_source import _py_commit_append
+
+    t = str(tmp_path / "tbl")
+    M.commit_append(spark, t, _df(spark, 0, 5))
+    mdir = os.path.join(t, "_manifests")
+    claim = os.path.join(mdir, "v2.claim")
+    open(claim, "w").close()  # another writer claimed v2 ...
+
+    def publish():  # ... and publishes it 100 ms later
+        with open(os.path.join(mdir, "v1.json")) as f:
+            m = json.load(f)
+        m.update(version=2, parent=1)
+        with open(os.path.join(mdir, "v2.json"), "w") as f:
+            json.dump(m, f)
+        os.remove(claim)
+
+    timer = threading.Timer(0.1, publish)
+    timer.start()
+    os.makedirs(os.path.join(t, "data", "py"))
+    try:
+        assert _py_commit_append(t, ["data/py"], "py-late") == 3
+    finally:
+        timer.join(10)
+    assert not timer.is_alive()
+
+
 def test_table_as_stream_hub_sink_then_feed(spark, tmp_path):
     """Round trip: a stream WRITES into the manifest table (native sink)
     and another stream READS it back (native source) — the table layer is

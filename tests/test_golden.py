@@ -14,10 +14,18 @@ from __future__ import annotations
 import hashlib
 import json
 import math
+import random
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
 from pdf_parse_vector_db_spark.operators import knn
+from pdf_parse_vector_db_spark.schemas import (
+    DECISION_LOST,
+    DECISION_WON,
+    DECISIONS,
+    SEARCH_FETCH_K,
+)
 
 #: (file_name, court_level, case_decision, [chunk vectors]) — file A carries a
 #: decoy worse chunk to prove best-per-file dedup; file X sits at the wrong
@@ -102,3 +110,103 @@ def test_win_percentage_zero_guard(spark):
     assert row.win_percentage == 0.0
     assert row.total_valid_decisions == 0
     assert row.invalid_decisions == 2
+
+
+def _random_candidates(rng: random.Random) -> list[tuple]:
+    """A candidate set as the service's Spark stage yields it: ≤ fetch_k
+    (chunk_id, file_id, file_name, case_decision, dist) rows. Distances
+    sit a sub-rounding jitter (or nothing) above a few base values, so
+    many files tie at the 4-dp score while their raw distances differ;
+    some files have a NULL case_decision or file_name."""
+    bases = [0.25, 0.3107, 0.5, 1.125]
+    rows, cid = [], 0
+    for f in range(rng.randint(1, 40)):
+        name = None if rng.random() < 0.05 else f"case_{rng.randrange(10**6)}_{f}.pdf"
+        fid = _sha(name or f"unnamed {f}")
+        dec = rng.choice(DECISIONS + [None])
+        for _ in range(rng.randint(1, 5)):
+            cid += rng.randint(1, 50)
+            jitter = 0.0 if rng.random() < 0.2 else rng.random() * 4e-5
+            rows.append((cid, fid, name, dec, rng.choice(bases) + jitter))
+    rows.sort(key=lambda r: (r[4], r[0]))
+    return rows[:SEARCH_FETCH_K]
+
+
+def test_driver_tail_matches_spark_search_response(spark):
+    """knn.search_response_rows — the serving facade's driver-side dedup,
+    top-k, statistics and response — is the Spark reference plan
+    (dedup_best_per_group → (dist, chunk_id) top-k → search_response) to
+    the byte: key order, hit order among equal 4-dp scores (sort_array
+    over the score-first struct, nulls first) and NULL fields dropped as
+    to_json drops them."""
+    saw_null_decision = saw_score_tie = False
+    for seed in range(8):
+        cands = spark.createDataFrame(
+            _random_candidates(random.Random(seed)),
+            "chunk_id long, file_id string, file_name string, "
+            "case_decision string, dist double",
+        )
+        rows = (
+            cands.orderBy("dist", "chunk_id")
+            .select(
+                "chunk_id",
+                "file_id",
+                "file_name",
+                "case_decision",
+                F.round("dist", 4).alias("score"),
+            )
+            .collect()
+        )
+        best = knn.dedup_best_per_group(
+            cands, group_col="file_id", score_col="dist", tiebreak_cols=("chunk_id",)
+        )
+        for top_k in (0, 1, 5, SEARCH_FETCH_K + 20):
+            top = (
+                best.orderBy("dist", "chunk_id")
+                .limit(top_k)
+                .withColumn("score", F.round("dist", 4))
+            )
+            want = json.loads(
+                knn.search_response(top, "query.pdf", _INPUT_LEVEL).collect()[0][0]
+            )
+            got = knn.search_response_rows(rows, "query.pdf", _INPUT_LEVEL, top_k)
+            assert json.dumps(got) == json.dumps(want), (seed, top_k)
+            results = want["results"]
+            saw_null_decision |= any("case_decision" not in r for r in results)
+            saw_score_tie |= any(
+                a["score"] == b["score"] for a, b in zip(results, results[1:])
+            )
+    assert saw_null_decision and saw_score_tie  # the fixture covers both
+
+
+def test_win_percentage_matches_spark_round(spark):
+    """The driver-side win_percentage is Spark's round(wins/valid*100, 2)
+    for every (wins, valid) a ≤ fetch_k result can hold. Spark rounds
+    HALF_UP on the double's decimal string; Python's round() does not
+    (3.125 → 3.12), so the helper must not use it."""
+    pairs = [(w, v) for v in range(1, SEARCH_FETCH_K + 1) for w in range(v + 1)]
+    pct = F.round(F.col("w").cast("double") / F.col("v").cast("double") * 100.0, 2)
+    want = {
+        (r.w, r.v): r.pct
+        for r in spark.createDataFrame(pairs, "w int, v int")
+        .select("w", "v", pct.alias("pct"))
+        .collect()
+    }
+    python_round_differs = 0
+    for w, v in pairs:
+        hits = [
+            SimpleNamespace(
+                chunk_id=i,
+                file_id=f"f{i:03d}",
+                file_name=f"f{i:03d}.pdf",
+                case_decision=DECISION_WON if i < w else DECISION_LOST,
+                score=0.5,
+            )
+            for i in range(v)
+        ]
+        resp = knn.search_response_rows(hits, "q.pdf", 2, SEARCH_FETCH_K)
+        stats = resp["appellant_statistics"]
+        assert (stats["win_count"], stats["total_valid_decisions"]) == (w, v)
+        assert stats["win_percentage"] == want[(w, v)], (w, v)
+        python_round_differs += round(w / v * 100.0, 2) != want[(w, v)]
+    assert python_round_differs  # e.g. 1/32: Spark 3.13, round() 3.12
