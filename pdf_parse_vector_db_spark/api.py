@@ -28,13 +28,14 @@ import copy
 import functools
 import hashlib
 import threading
+import uuid
 from types import SimpleNamespace
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parse_vector_db_spark.functions.classifiers import case_decision_expr
-from pdf_parse_vector_db_spark.functions.vector import l2_distance
+from pdf_parse_vector_db_spark.functions.vector import l2_distance, l2_distance_sql
 from pdf_parse_vector_db_spark.operators import knn
 from pdf_parse_vector_db_spark.operators.chunker import chunk_documents, chunk_text
 from pdf_parse_vector_db_spark.operators.embedder import embed_text_py, hashing_embedder
@@ -128,7 +129,21 @@ class SparkVectorService:
         #   * raw (manifested=False) mode is NOT memoised: its parquet root
         #     is appended in place and its local counter names no data
         #     (another process's append never moves it), so it keeps a
-        #     fresh spark.read.parquet per request.
+        #     fresh parquet read per request;
+        #   * a memoised frame is persisted (Spark's default storage level,
+        #     which spills to disk under memory pressure) and registered as
+        #     a temp view under a per-entry uuid name, so the exact
+        #     candidate statement reads the level from memory. The first
+        #     scan at the version (the ingest's count or the first search)
+        #     fills the cache inside its own job. Eviction unpersists the
+        #     frame without blocking and drops its view. A request that
+        #     still holds an evicted frame (or a statement analysed over
+        #     its view) recomputes it from the same immutable commit dirs,
+        #     so it returns what it would have read from the cache.
+        #     Unmemoised frames (a late request's, raw mode's) are never
+        #     persisted. Spark keys its cache by plan, so two instances on
+        #     one path at one version share an entry, and one's eviction
+        #     costs the other a recompute, never a wrong row.
         self._frames: dict = {}
         self._frame_lock = threading.Lock()
 
@@ -216,13 +231,19 @@ class SparkVectorService:
                 # whatever head a later foreign commit made); the level's
                 # frame is the one this level's next search reuses
                 version = self._version
-            written = self._level(version, int(court_level)).filter(
-                F.col("file_id") == F.sha2(F.lit(file_name), 256)
+            # the file's few rows come back whole: an aggregate would plan
+            # an exchange, and adaptive execution then fills the frame's
+            # cache in a job of its own instead of inside this scan
+            written = (
+                self._level(version, int(court_level))
+                .filter(F.col("file_id") == F.sha2(F.lit(file_name), 256))
+                .select("case_decision")
+                .collect()
             )
-            row = written.agg(
-                F.count(F.lit(1)).alias("n"), F.first("case_decision").alias("d")
-            ).collect()[0]
-        return {"chunks_inserted": row.n, "case_decision": row.d}
+        return {
+            "chunks_inserted": len(written),
+            "case_decision": written[0].case_decision if written else None,
+        }
 
     # -- read path ---------------------------------------------------------
 
@@ -255,23 +276,22 @@ class SparkVectorService:
             version = self._version
         return version, int(court_level) + 1
 
-    def _embed(self, text: str) -> tuple[list, Column]:
-        """(qvec, q): the first usable chunk's embedding and its array
+    def _embed(self, text: str) -> tuple[list, str]:
+        """(qvec, q): the first usable chunk's embedding and its SQL array
         literal. The reference embeds every chunk and keeps [0]
         (extract_and_search_v2.py:124-135); embedding only the first chunk
         with a usable embedding is the same result without the discarded
         calls (empty-embedding chunks are dropped upstream there too).
 
-        The literal is ONE py4j call: a SQL array of DOUBLE literals, whose
-        repr() round-trips every value exactly. F.array of per-element lits
-        made dim + 1 calls, and F.lit of a list or ndarray still crosses
-        the gateway once per element."""
+        The literal is a SQL array of DOUBLE literals, whose repr()
+        round-trips every value exactly: it goes into the candidate
+        statement's text, and into a Column in ONE py4j call (_with_dist).
+        F.array of per-element lits made dim + 1 calls, and F.lit of a
+        list or ndarray still crosses the gateway once per element."""
         for first_chunk in chunk_text(text):
             qvec = embed_text_py(first_chunk, self.dim)
             if qvec is not None:
-                return qvec, F.expr(
-                    "array(" + ", ".join(f"{x!r}D" for x in qvec) + ")"
-                )
+                return qvec, "array(" + ", ".join(f"{x!r}D" for x in qvec) + ")"
         raise ValueError("No text could be extracted from the PDF")
 
     def _cached(self, key: tuple) -> dict | None:
@@ -295,22 +315,44 @@ class SparkVectorService:
             self._cache[key] = copy.deepcopy(out)
 
     def _candidates(
-        self, index: str, version: int, target: int, qvec: list, q: Column
+        self, index: str, version: int, target: int, qvec: list, q: str
     ) -> list:
         """The Spark part of every fetch_k-bounded search: the ≤
         SEARCH_FETCH_K nearest chunks at `version` through the chosen tier
-        (exact = brute force over the level's memoised frame), collected
+        (exact = brute force over the level's cached frame), collected
         as _exprs().hit_cols rows in ascending (dist, chunk_id) order.
         The plan ends at the top-k: scan → L2 → TakeOrderedAndProject."""
         if index != "exact":
-            hits = self._tier_candidates(index, version, target, qvec, q)
-        else:
-            hits = (
-                _with_dist(self._level(version, target), q)
-                .orderBy(*_exprs().by_dist)
-                .limit(SEARCH_FETCH_K)
+            hits = self._tier_candidates(index, version, target, qvec, q).select(
+                *_exprs().hit_cols
             )
-        return hits.select(*_exprs().hit_cols).collect()
+        else:
+            hits = self._exact(version, target, q)
+        return hits.collect()
+
+    def _exact(self, version: int, target: int, q: str) -> DataFrame:
+        """The exact candidate stage as ONE SQL statement, so one parse and
+        one analysis (_candidate_sql). It reads the level's memoised view;
+        raw mode reads its parquet root, and a late request's unmemoised
+        frame gets a view that lives only while the statement is analysed.
+
+        Memo lookup and analysis share the frame lock: once analysed, the
+        plan no longer names the view, so an eviction can drop it."""
+        if not self.manifested:
+            root = self.path.replace("`", "``")
+            return self.spark.sql(
+                _candidate_sql(f"parquet.`{root}` WHERE court_level = {target}", q)
+            )
+        with self._frame_lock:
+            df, view = self._memo(version, target)
+            if view is not None:
+                return self.spark.sql(_candidate_sql(view, q))
+            view = f"svc_late_{uuid.uuid4().hex}"
+            df.createOrReplaceTempView(view)
+            try:
+                return self.spark.sql(_candidate_sql(view, q))
+            finally:
+                self.spark.catalog.dropTempView(view)
 
     def search_similar_cases(
         self,
@@ -324,7 +366,9 @@ class SparkVectorService:
         best-per-file dedup → ascending top-k → stats → nested response
         (golden shape README.md:17-65).
 
-        Only the candidate stage is a Spark job; the dedup, top-k cut,
+        Only the candidate stage is a Spark job: on the exact tier one SQL
+        statement (one parse, one analysis) over the level's frame, which
+        is cached in memory per manifest version. The dedup, top-k cut,
         statistics and response run on the driver over its ≤ fetch_k
         collected rows (knn.search_response_rows), where the reference
         runs them too (Python after the Milvus call,
@@ -745,13 +789,14 @@ class SparkVectorService:
             if n:
                 path = self._index_dir(tier, version, target)
                 if tier == "ivf":
-                    seeds = F.broadcast(  # per-level nlist ∝ √n — tiny
-                        nodes.filter(
-                            F.col("node_id") % self._svc_stride(n) == 0
-                        ).select(
+                    stride = self._svc_stride(n)
+                    seeds = ivf_index.seed_broadcast_hint(
+                        nodes.filter(F.col("node_id") % stride == 0).select(
                             F.col("node_id").alias("cid"),
                             F.col("embedding").alias("cvec"),
-                        )
+                        ),
+                        -(-n // stride),
+                        self.dim,
                     )
                     assign = (
                         nodes.crossJoin(seeds)
@@ -1095,20 +1140,33 @@ class SparkVectorService:
     def _level(self, version: int, level: int) -> DataFrame:
         """The chunk rows at court level `level` as of `version`, memoised
         per (version, level) in manifested mode (see the memo invariants
-        in __init__). A late request at an older version gets its frame
-        unmemoised rather than evicting the newer head's."""
+        in __init__)."""
         if not self.manifested:
             return self._chunks().filter(F.col("court_level") == level)
-        key = (version, level)
         with self._frame_lock:
-            df = self._frames.get(key)
-            if df is None:
-                df = self._chunks(version).filter(F.col("court_level") == level)
-                if all(v <= version for v, _ in self._frames):
-                    for stale in [k for k in self._frames if k[0] < version]:
-                        self._frames.pop(stale)
-                    self._frames[key] = df
-            return df
+            return self._memo(version, level)[0]
+
+    def _memo(self, version: int, level: int) -> tuple[DataFrame, str | None]:
+        """(frame, view) at (version, level); the caller holds the frame
+        lock. A new frame at the newest version seen is memoised: it is
+        persisted and registered as a view, and every older version's
+        entry is evicted. A late request at an older version gets its
+        frame unmemoised (view None) rather than evicting the newer
+        head's."""
+        key = (version, level)
+        if key in self._frames:
+            return self._frames[key]
+        df = self._chunks(version).filter(F.col("court_level") == level)
+        if any(v > version for v, _ in self._frames):
+            return df, None
+        for stale in [k for k in self._frames if k[0] < version]:
+            old, view = self._frames.pop(stale)
+            old.unpersist(blocking=False)
+            self.spark.catalog.dropTempView(view)
+        view = f"svc_level_{uuid.uuid4().hex}"
+        df.persist().createOrReplaceTempView(view)
+        self._frames[key] = (df, view)
+        return df, view
 
 
 #: candidate-stage tiers every search entry point routes through
@@ -1137,8 +1195,24 @@ def _exprs() -> SimpleNamespace:
     )
 
 
-def _with_dist(df: DataFrame, q: Column) -> DataFrame:
-    """`df` + the query literal ``__q`` + its exact L2 ``dist``. The
-    optimizer folds the literal into the distance and prunes ``__q``
-    wherever a later projection leaves it unused."""
-    return df.withColumn("__q", q).withColumn("dist", _exprs().dist)
+def _with_dist(df: DataFrame, q: str) -> DataFrame:
+    """`df` + the query literal ``__q`` (the SQL text `q`) + its exact L2
+    ``dist``. The optimizer folds the literal into the distance and prunes
+    ``__q`` wherever a later projection leaves it unused."""
+    return df.withColumn("__q", F.expr(q)).withColumn("dist", _exprs().dist)
+
+
+def _candidate_sql(source: str, q: str) -> str:
+    """The exact candidate stage as one statement: L2 `dist` to the query
+    literal `q` (l2_distance's fold), the (dist, chunk_id) top-fetch_k and
+    the hit columns with the 4-dp score — the plan the DataFrame chain
+    over _exprs() builds for the tiers. `source` is the FROM text: a view
+    name, or a parquet root with its level filter. Only engine-made text
+    goes in (the view name, the repr of each query double, fetch_k),
+    never request text."""
+    return (
+        "SELECT chunk_id, file_id, file_name, case_decision, "
+        "round(dist, 4) AS score FROM (SELECT chunk_id, file_id, file_name, "
+        f"case_decision, {l2_distance_sql('embedding', q)} AS dist "
+        f"FROM {source}) ORDER BY dist, chunk_id LIMIT {SEARCH_FETCH_K}"
+    )

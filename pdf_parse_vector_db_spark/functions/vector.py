@@ -48,6 +48,17 @@ def l2_distance(a: Column, b: Column) -> Column:
     return F.sqrt(l2_distance_sq(a, b))
 
 
+def l2_distance_sql(a: str, b: str) -> str:
+    """SQL text of l2_distance over the SQL expressions `a` and `b`: the
+    same casts, zip_with square, left-to-right aggregate from 0.0D and
+    sqrt, so a statement built from it computes bit-identical doubles."""
+    return (
+        f"sqrt(aggregate(zip_with(CAST({a} AS ARRAY<DOUBLE>), "
+        f"CAST({b} AS ARRAY<DOUBLE>), (x, y) -> (x - y) * (x - y)), "
+        "0.0D, (acc, x) -> acc + x))"
+    )
+
+
 def vector_norm(a: Column) -> Column:
     return F.sqrt(dot_product(a, a))
 

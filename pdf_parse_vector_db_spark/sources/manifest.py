@@ -23,7 +23,8 @@ that protocol's minimal correct core, on the Hadoop FileSystem API:
     re-read from the destination after publish, so even a writer whose
     claim lease was swept while it was paused can never report success
     over another writer's committed manifest.
-  * readers list ``_manifests``, take the highest version, and read
+  * readers find the highest version (``head_version``: a forward probe
+    from the last head seen, else a listing of ``_manifests``) and read
     exactly that manifest's file list — a true snapshot: no vanish
     window, no partial append, no dependence on directory mtimes.
   * replace-commits (compaction, deletion rewrites) stage new files and
@@ -91,15 +92,36 @@ def _has_part_files(jvm, fs, path: str) -> bool:
     return False
 
 
+#: the last head read per table path. Only a hint: head_version checks it
+#: against the files on every read, so a stale value costs a few more
+#: probes or a glob, never a wrong answer.
+_HEAD_HINTS: dict[str, int] = {}
+
+
 def head_version(spark: SparkSession, table: str) -> int:
-    """Highest committed manifest version (0 = empty table)."""
-    jvm, fs = _jvm_fs(spark, table)
-    glob = _jpath(jvm, f"{table}/{_MANIFESTS}/v*.json")
-    best = 0
-    for st in fs.globStatus(glob) or []:
-        name = st.getPath().getName()  # v{N}.json
-        best = max(best, int(name[1:-5]))
-    return best
+    """Highest committed manifest version (0 = empty table).
+
+    Versions are dense: every commit publishes head + 1, and vacuum drops
+    only manifests below the ones it keeps, head included. So from the
+    last head seen, h, while v{h}.json still exists the head is the last
+    of v{h+1}, v{h+2}, ... that exists: a constant number of gateway calls
+    per read, where the glob's listing costs about four calls per
+    manifest and the service never vacuums. The glob runs only without a
+    usable hint (the first read, or v{h}.json vacuumed or the table
+    recreated)."""
+    jvm = spark._jvm
+    Path = jvm.org.apache.hadoop.fs.Path
+    fs = Path(table).getFileSystem(spark._jsc.hadoopConfiguration())
+    head = _HEAD_HINTS.get(table, 0)
+    if head and fs.exists(Path(f"{table}/{_MANIFESTS}/v{head}.json")):
+        while fs.exists(Path(f"{table}/{_MANIFESTS}/v{head + 1}.json")):
+            head += 1
+    else:
+        head = 0
+        for st in fs.globStatus(Path(f"{table}/{_MANIFESTS}/v*.json")) or []:
+            head = max(head, int(st.getPath().getName()[1:-5]))  # v{N}.json
+    _HEAD_HINTS[table] = head
+    return head
 
 
 def _read_manifest(spark: SparkSession, table: str, version: int) -> dict:

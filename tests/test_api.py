@@ -606,3 +606,89 @@ def test_uncached_search_is_one_single_stage_job(spark, tmp_path):
     assert len(plans) == 1 and "TakeOrderedAndProject" in plans[0]
     for node in ("Window", "Aggregate"):
         assert node not in plans[0], node
+    # the level is read from the frame the first search cached: the plan
+    # scans it in memory, and parquet appears only in the cached
+    # relation's own build plan, printed beneath it
+    executed = plans[0].split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in executed
+    assert "Scan parquet" not in executed, executed
+
+
+def test_level_frame_cache_lifecycle(spark, tmp_path):
+    """The memoised level frame is persisted while memoised, and the next
+    version's frame evicts it: unpersisted, its view dropped. Over
+    ingest → search cycles the cache holds at most one frame per level
+    searched. A statement analysed over a frame that is evicted before it
+    runs still returns what a fresh service answers at that version."""
+    import json
+
+    from pyspark import StorageLevel
+
+    from pdf_parse_vector_db_spark.operators import knn
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    base = persisted().size()
+    path = str(tmp_path / "wh")
+    svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(2):
+        svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    svc.search_similar_cases("query.pdf", QUERY, court_level=2)
+    v = M.head_version(spark, path)
+    frame, view = svc._frames[(v, 3)]
+    assert frame.storageLevel != StorageLevel.NONE
+    assert spark.catalog.tableExists(view)
+
+    held_text = QUERY + " held"
+    version, target = svc._request(held_text, 2, "exact")
+    held = svc._exact(version, target, svc._embed(held_text)[1])
+    want = SparkVectorService(spark, path, manifested=True).search_similar_cases(
+        "query.pdf", held_text, court_level=2
+    )
+    svc.ingest_legal_document("case_2.pdf", QUERY, court_level=3)
+    svc.search_similar_cases("query.pdf", QUERY + " next", court_level=2)
+    assert set(svc._frames) == {(v + 1, 3)}
+    assert frame.storageLevel == StorageLevel.NONE
+    assert not spark.catalog.tableExists(view)
+    got = knn.search_response_rows(held.collect(), "query.pdf", 2, 5)
+    assert json.dumps(got) == json.dumps(want)
+
+    for i in range(5):
+        svc.ingest_legal_document(f"cycle_{i}.pdf", DOC + f" cycle {i}", court_level=3)
+        resp = svc.search_similar_cases("query.pdf", QUERY + f" cycle {i}", court_level=2)
+        assert resp["result_count"] == min(5, 4 + i)
+        assert persisted().size() <= base + 1
+
+
+def test_sql_l2_fold_matches_l2_distance(spark):
+    """The candidate statement's SQL fold computes the same doubles, bit
+    for bit, as l2_distance on stored float32 vectors, and so the same
+    4-dp scores."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from pdf_parse_vector_db_spark.functions.vector import (
+        l2_distance,
+        l2_distance_sql,
+    )
+
+    rng = np.random.default_rng(20261018)
+    vecs = rng.standard_normal((300, 64)).astype(np.float32)
+    vecs[::7] *= 1e-3  # small distances stress the rounding of the sum
+    qvec = [float(x) for x in rng.standard_normal(64).astype(np.float32)]
+    q = "array(" + ", ".join(f"{x!r}D" for x in qvec) + ")"
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "id int, embedding array<float>",
+    )
+    got = df.selectExpr("id", f"{l2_distance_sql('embedding', q)} AS d").withColumn(
+        "s", F.round("d", 4)
+    )
+    want = (
+        df.withColumn("__q", F.expr(q))
+        .select("id", l2_distance(F.col("embedding"), F.col("__q")).alias("d"))
+        .withColumn("s", F.round("d", 4))
+    )
+    a = {r.id: (r.d.hex(), r.s) for r in got.collect()}
+    b = {r.id: (r.d.hex(), r.s) for r in want.collect()}
+    assert len(a) == 300 and a == b

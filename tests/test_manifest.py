@@ -1070,3 +1070,48 @@ def test_merge_idempotency_key_exactly_once(spark, tmp_path):
     _, df = M.snapshot(spark, t)
     rows = {r.id: r.court_level for r in df.collect()}
     assert rows[3] == 42 and rows[4] == 42
+
+
+def test_head_version_reads_cost_constant_gateway_calls(spark, tmp_path):
+    """A head read costs the same number of JVM calls at 5 and at 300
+    manifests (a glob of _manifests cost about four per manifest, paid by
+    every manifested search), returns the true max, ignores claim and tmp
+    files, and falls back to the glob when the remembered head is gone."""
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+
+    def calls(table):
+        n = [0]
+
+        def counting(*args, **kwargs):
+            n[0] += 1
+            return real(*args, **kwargs)
+
+        client.send_command = counting
+        try:
+            head = M.head_version(spark, table)
+        finally:
+            del client.send_command
+        return head, n[0]
+
+    counts = []
+    for n in (5, 300):
+        t = tmp_path / f"t{n}"
+        mdir = t / "_manifests"
+        mdir.mkdir(parents=True)
+        for v in range(1, n + 1):
+            (mdir / f"v{v}.json").write_text("{}")
+        (mdir / f"v{n + 1}.claim").write_text("")
+        (mdir / f"v{n + 1}.json.tmp.abc").write_text("{}")
+        assert M.head_version(spark, str(t)) == n  # first read: the glob
+        (mdir / f"v{n + 1}.json").write_text("{}")  # a commit lands
+        head, k = calls(str(t))
+        assert head == n + 1
+        counts.append(k)
+    assert counts[0] == counts[1]
+    # the remembered head vanished (the table was recreated shorter)
+    for p in mdir.iterdir():
+        p.unlink()
+    for v in (1, 2):
+        (mdir / f"v{v}.json").write_text("{}")
+    assert M.head_version(spark, str(t)) == 2

@@ -80,3 +80,47 @@ def test_corpus_seeds_gate_and_assign_cells(spark):
         spark.conf.unset(SEED_BCAST_CONF)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert got == base
+
+
+def test_service_ivf_build_honors_the_gate(spark, tmp_path):
+    """The service's per-level IVF build routes its seeds through the same
+    gate: with the bound at 0 its plans hold no BroadcastExchange (the
+    automatic broadcast of a small relation is off, as above), and the
+    ivf-tier response is the one the default bound gives."""
+    from pdf_parse_vector_db_spark.api import SparkVectorService
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    body = "The appellant filed a motion for review of the order. " * 40
+    query = "The appellant filed a motion seeking review of the decision. " * 25
+    path = str(tmp_path / "wh")
+    svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(6):
+        svc.ingest_legal_document(f"case_{i}.pdf", body + f" variant {i}", court_level=3)
+    want = svc.search_similar_cases("q.pdf", query, court_level=2, index="ivf")
+    version = M.head_version(spark, path)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def last_execution() -> int:
+        execs = store.executionsList()
+        return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1)
+
+    spark.conf.set(SEED_BCAST_CONF, "0")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        gated = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+        first = last_execution()
+        gated._ensure_index("ivf", version, 3)
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        execs = store.executionsList()
+        plans = [
+            execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())
+            if execs.apply(i).executionId() > first
+        ]
+        got = gated.search_similar_cases("q.pdf", query, court_level=2, index="ivf")
+    finally:
+        spark.conf.unset(SEED_BCAST_CONF)
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert any("CartesianProduct" in p for p in plans), plans
+    assert not any("BroadcastExchange" in p for p in plans), plans
+    assert got == want
