@@ -31,7 +31,8 @@ import threading
 import uuid
 from types import SimpleNamespace
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parse_vector_db_spark.functions.classifiers import case_decision_expr
@@ -143,8 +144,18 @@ class SparkVectorService:
         #     Unmemoised frames (a late request's, raw mode's) are never
         #     persisted. Spark keys its cache by plan, so two instances on
         #     one path at one version share an entry, and one's eviction
-        #     costs the other a recompute, never a wrong row.
+        #     costs the other a recompute, never a wrong row;
+        #   * a memoised level also gets a driver-resident matrix
+        #     (_LevelMatrix in _mats), pulled over Arrow at the first exact
+        #     search at the version (an ingest's own level read never
+        #     builds one). It is immutable, so concurrent requests share
+        #     it; it is evicted with its frame; and it is gated: a level
+        #     over DRIVER_MATRIX_MAX_BYTES, or holding a row that is not
+        #     exactly `dim` finite elements, memoises None and stays on
+        #     the cached SQL statement (_exact). close() releases frames,
+        #     views and matrices.
         self._frames: dict = {}
+        self._mats: dict = {}
         self._frame_lock = threading.Lock()
 
     # -- write path --------------------------------------------------------
@@ -317,22 +328,44 @@ class SparkVectorService:
     def _candidates(
         self, index: str, version: int, target: int, qvec: list, q: str
     ) -> list:
-        """The Spark part of every fetch_k-bounded search: the ≤
-        SEARCH_FETCH_K nearest chunks at `version` through the chosen tier
-        (exact = brute force over the level's cached frame), collected
+        """The candidate stage of every fetch_k-bounded search: the ≤
+        SEARCH_FETCH_K nearest chunks at `version` through the chosen tier,
         as _exprs().hit_cols rows in ascending (dist, chunk_id) order.
-        The plan ends at the top-k: scan → L2 → TakeOrderedAndProject."""
+        Exact is brute force: in NumPy over the level's driver matrix when
+        the level has one (no Spark job), else one SQL statement over its
+        cached frame. A Spark plan ends at the top-k: scan → L2 →
+        TakeOrderedAndProject."""
         if index != "exact":
             hits = self._tier_candidates(index, version, target, qvec, q).select(
                 *_exprs().hit_cols
             )
         else:
+            mat = self._matrix(version, target)
+            if mat is not None:
+                return mat.candidates(qvec)
             hits = self._exact(version, target, q)
         return hits.collect()
 
+    def _matrix(self, version: int, level: int) -> _LevelMatrix | None:
+        """The memoised level's driver matrix, pulled on first use; None
+        keeps the search on SQL: raw mode, a late request (its frame is
+        not memoised) or a level the gate keeps out, a decision memoised
+        with the entry so such a level is not pulled again."""
+        if not self.manifested:
+            return None
+        with self._frame_lock:
+            df, view = self._memo(version, level)
+            if view is None:
+                return None
+            key = (version, level)
+            if key not in self._mats:
+                self._mats[key] = _LevelMatrix.pull(df, self.dim)
+            return self._mats[key]
+
     def _exact(self, version: int, target: int, q: str) -> DataFrame:
         """The exact candidate stage as ONE SQL statement, so one parse and
-        one analysis (_candidate_sql). It reads the level's memoised view;
+        one analysis (_candidate_sql), for a level without a driver matrix
+        (_matrix). It reads the level's memoised view;
         raw mode reads its parquet root, and a late request's unmemoised
         frame gets a view that lives only while the statement is analysed.
 
@@ -366,9 +399,13 @@ class SparkVectorService:
         best-per-file dedup → ascending top-k → stats → nested response
         (golden shape README.md:17-65).
 
-        Only the candidate stage is a Spark job: on the exact tier one SQL
-        statement (one parse, one analysis) over the level's frame, which
-        is cached in memory per manifest version. The dedup, top-k cut,
+        Only the candidate stage can be a Spark job. On the exact tier a
+        manifested level under the size gate (DRIVER_MATRIX_MAX_BYTES) is
+        answered in NumPy from its driver-resident matrix, pulled once per
+        manifest version, so an uncached search runs no Spark job; any
+        other level runs one SQL statement (one parse, one analysis) over
+        its frame, cached in memory per manifest version. Both compute
+        the same doubles, order and 4-dp scores. The dedup, top-k cut,
         statistics and response run on the driver over its ≤ fetch_k
         collected rows (knn.search_response_rows), where the reference
         runs them too (Python after the Milvus call,
@@ -473,9 +510,10 @@ class SparkVectorService:
         ascending-distance order), pymilvus `search_iterator(
         batch_size=...)`'s next()/close() loop.
 
-        Spark shape: ONE bounded job collects the candidate stage at the
-        over-fetch width (SEARCH_FETCH_K), deduped per file on the driver
-        like search_similar_cases, then pages slice locally —
+        Spark shape: at most ONE bounded job (none from a driver matrix)
+        collects the candidate stage at the over-fetch width
+        (SEARCH_FETCH_K), deduped per file on the driver like
+        search_similar_cases, then pages slice locally —
         a page fetch must not re-run a cluster job, and deep paging past
         the over-fetch width is an explicit iterator exhaustion (Milvus
         iterators likewise page within the engine's reduced result set)."""
@@ -510,9 +548,9 @@ class SparkVectorService:
         the caller still sees intra-file evidence.
 
         Spark shape: the tier's over-fetch candidates (bounded at
-        SEARCH_FETCH_K) are the only job; the per-file ranks up to
-        group_size and the group ranking run on the driver over those
-        ≤ fetch_k rows (knn.best_per_file)."""
+        SEARCH_FETCH_K) are the only job, if any (_candidates); the
+        per-file ranks up to group_size and the group ranking run on the
+        driver over those ≤ fetch_k rows (knn.best_per_file)."""
         if limit < 1 or group_size < 1:
             raise ValueError("limit and group_size must be >= 1")
         version, target = self._request(text, court_level, index)
@@ -1160,17 +1198,110 @@ class SparkVectorService:
         if any(v > version for v, _ in self._frames):
             return df, None
         for stale in [k for k in self._frames if k[0] < version]:
-            old, view = self._frames.pop(stale)
-            old.unpersist(blocking=False)
-            self.spark.catalog.dropTempView(view)
+            self._evict(stale)
         view = f"svc_level_{uuid.uuid4().hex}"
         df.persist().createOrReplaceTempView(view)
         self._frames[key] = (df, view)
         return df, view
 
+    def _evict(self, key: tuple) -> None:
+        """Drop one memo entry (frame lock held): unpersist its frame
+        without blocking, drop its view and its driver matrix."""
+        df, view = self._frames.pop(key)
+        self._mats.pop(key, None)
+        df.unpersist(blocking=False)
+        self.spark.catalog.dropTempView(view)
+
+    def close(self) -> None:
+        """Release what the service holds in the session: every memoised
+        frame is unpersisted and its view dropped, and the driver
+        matrices go. A later search memoises its level afresh."""
+        with self._frame_lock:
+            for key in list(self._frames):
+                self._evict(key)
+
+    def __enter__(self) -> SparkVectorService:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
+
 
 #: candidate-stage tiers every search entry point routes through
 _TIERS = ("exact", "ivf", "graph", "bq", "sq8")
+
+#: size gate of a driver-resident level matrix (rows × dim float64; the
+#: IVF seed broadcast's default bound): a level over it stays on the
+#: cached SQL statement, so the driver holds at most this much per level
+DRIVER_MATRIX_MAX_BYTES = 128 * 1024 * 1024
+
+#: a collected candidate row, as the exact statement's rows are
+_HIT = Row("chunk_id", "file_id", "file_name", "case_decision", "score")
+
+
+class _LevelMatrix:
+    """One memoised level on the driver: its embeddings as a column-major
+    float64 matrix (one contiguous row per dimension), its chunk ids and
+    the hit payload as an Arrow table. Immutable, so concurrent requests
+    share it.
+
+    candidates() is the exact statement in NumPy: dist() is l2_distance's
+    bit-identical twin (see functions/vector.py), then the same
+    (dist, chunk_id) top-fetch_k and Spark's round(dist, 4) as score."""
+
+    __slots__ = ("emb", "chunk_id", "payload")
+
+    def __init__(self, emb: np.ndarray, chunk_id: np.ndarray, payload) -> None:
+        self.emb, self.chunk_id, self.payload = emb, chunk_id, payload
+        emb.flags.writeable = chunk_id.flags.writeable = False
+
+    @classmethod
+    def pull(cls, df: DataFrame, dim: int) -> _LevelMatrix | None:
+        """The level frame `df` over Arrow, or None if it stays on SQL:
+        more rows than the gate admits (at most one row over it is
+        pulled), or a row that is not exactly `dim` finite elements. Spark
+        gives such a row a NULL (or non-finite) dist, which it orders and
+        rounds as NumPy does not."""
+        max_rows = DRIVER_MATRIX_MAX_BYTES // (8 * dim)
+        table = df.select(*_HIT[:4], "embedding").limit(max_rows + 1).toArrow()
+        lists = table.column("embedding").combine_chunks()
+        if table.num_rows > max_rows or lists.null_count:
+            return None
+        flat = lists.flatten()
+        if (lists.value_lengths().to_numpy() != dim).any() or flat.null_count:
+            return None
+        emb = flat.to_numpy().astype(np.float64).reshape(-1, dim)
+        if not np.isfinite(emb).all():
+            return None
+        return cls(
+            np.ascontiguousarray(emb.T),
+            table.column("chunk_id").to_numpy(),
+            table.drop_columns(["embedding"]),
+        )
+
+    def dist(self, qvec: list) -> np.ndarray:
+        """Every row's L2 distance to `qvec`, l2_distance's fold."""
+        acc = np.zeros(self.chunk_id.size)
+        for col, x in zip(self.emb, qvec):
+            acc += (col - x) ** 2
+        return np.sqrt(acc)
+
+    def candidates(self, qvec: list) -> list:
+        """The ≤ SEARCH_FETCH_K nearest rows to `qvec` in ascending
+        (dist, chunk_id) order, as _HIT rows with Spark's 4-dp score."""
+        dist = self.dist(qvec)
+        k = SEARCH_FETCH_K
+        if dist.size > k:
+            # every row tied with the k-th distance competes on chunk_id
+            keep = np.flatnonzero(dist <= np.partition(dist, k - 1)[k - 1])
+        else:
+            keep = np.arange(dist.size)
+        keep = keep[np.lexsort((self.chunk_id[keep], dist[keep]))][:k]
+        cols = self.payload.take(keep).to_pydict()
+        return [
+            _HIT(*row, knn._spark_round(d, 4))
+            for row, d in zip(zip(*cols.values()), dist[keep].tolist())
+        ]
 
 
 @functools.cache

@@ -2,10 +2,19 @@
 
 The reference's distance metric is Milvus L2 over dim-1536 float vectors
 (extract_and_embed.py:53-54: IVF_FLAT, metric_type L2). Here distance is a
-column expression — `zip_with` + `aggregate` — which stays entirely JVM-side
-inside whole-stage codegen: no Python, no UDF, no serialization. That is the
-"vectorized execution" of this engine's hot path; a Pandas-UDF variant
-(operators/knn.py) exists only for very high dims where a BLAS matmul wins.
+column expression — `zip_with` + `aggregate` — which stays JVM-side: no
+Python, no UDF, no serialization. It is NOT whole-stage codegen'd: both
+higher-order functions fall back to interpreted evaluation, so the Project
+that computes a distance carries no `*(n)` codegen marker and calls two
+lambdas per element per row. A Pandas-UDF variant (operators/knn.py) exists
+only for very high dims where a BLAS matmul wins.
+
+The serving facade answers exact searches over a small level from a
+driver-resident NumPy matrix (api._LevelMatrix.dist). That fold is
+l2_distance's bit-identical twin: float32 widened to double, squared
+differences summed left to right from 0.0, then sqrt;
+tests/test_api.py::test_driver_matrix_fold_matches_l2_distance pins the
+bits, as test_sql_l2_fold_matches_l2_distance pins l2_distance_sql's.
 
 All arithmetic is double-precision regardless of the stored float32 element
 type: elements are cast before multiply so results are stable across

@@ -1295,6 +1295,10 @@ _INC_OFFSET = 5000
 _INC_THRESHOLD = 0.5
 _INC_HASHES = 32
 _INC_BANDS = 8
+#: size gate of the candidate-id broadcast (ids × 8 B; the IVF seed
+#: broadcast's default bound): past it the history semi-join plans
+#: unhinted, so an outsized batch never rides a broadcast
+_INC_CANDS_BCAST_MAX_BYTES = 128 * 1024 * 1024
 
 
 def _new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1348,6 +1352,14 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     nsh = new.select("new_id", T.shingles_expr("text").alias("sh_n"))
+    # broadcast the BATCH-BOUNDED candidate ids (the checkpoint leaf has
+    # no size stats, so unhinted the planner shuffles the history text
+    # into a sort-merge semi-join — guide §3.1) while they fit the gate;
+    # the count (an upper bound on the distinct ids) fills the lazy cut
+    # that both joins below read anyway
+    ids = cands.select(F.col("hist_id").alias("doc_id"))
+    if cands.count() * 8 <= _INC_CANDS_BCAST_MAX_BYTES:
+        ids = F.broadcast(ids)
     # Verification shingles ONLY for band-colliding history docs (round 11,
     # guide §2.3/§3.2): the old shape built shingle arrays for the ENTIRE
     # history and broadcast them all into the verify join — corpus-sized
@@ -1357,14 +1369,7 @@ def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index and re-reading the corpus. Same verified pairs (rows outside
     # the candidate set never survived the inner join anyway).
     hsh = (
-        hist.join(
-            # broadcast the BATCH-BOUNDED candidate ids (the checkpoint
-            # leaf has no size stats, so unhinted the planner shuffles the
-            # history text into a sort-merge semi-join — guide §3.1)
-            F.broadcast(cands.select(F.col("hist_id").alias("doc_id"))),
-            on="doc_id",
-            how="left_semi",
-        )
+        hist.join(ids, on="doc_id", how="left_semi")
         .select(F.col("doc_id").alias("hist_id"), T.shingles_expr("text").alias("sh_h"))
     )
     verified = (

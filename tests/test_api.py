@@ -573,27 +573,64 @@ def test_negative_top_k_is_a_validation_error(svc):
     }
 
 
-def test_uncached_search_is_one_single_stage_job(spark, tmp_path):
-    """The Spark plan of a search ends at the candidate stage (scan → L2 →
-    top-fetch_k): an uncached exact search runs one job of one stage, and
-    its plan holds no window or aggregate — the per-file dedup, top-k
-    and statistics run on the driver over the collected candidates."""
+def _search_jobs(spark, svc, text: str) -> tuple[dict, list[int]]:
+    """An uncached exact search run in a job group of its own: (response,
+    the ids of the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup("one-search", "uncached exact search")
+    try:
+        resp = svc.search_similar_cases("query.pdf", text, court_level=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return resp, [int(j) for j in sc.statusTracker().getJobIdsForGroup("one-search")]
+
+
+def test_uncached_search_below_the_gate_runs_no_spark_job(spark, tmp_path):
+    """Under the driver-matrix gate the exact candidate stage runs in NumPy
+    over the level's matrix, pulled once per version by the first search:
+    a later uncached search runs no Spark job, and answers what the SQL
+    statement answers."""
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    path = str(tmp_path / "wh")
+    svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(3):
+        svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    v = M.head_version(spark, path)
+    assert svc._mats == {}  # an ingest's level read builds no matrix
+    svc.search_similar_cases("query.pdf", QUERY, court_level=2)  # pull the matrix
+    assert svc._mats[(v, 3)] is not None
+    resp, jobs = _search_jobs(spark, svc, QUERY + " again")
+    assert resp["result_count"] == 3
+    assert jobs == []
+    qvec, q = svc._embed(QUERY + " again")
+    assert svc._candidates("exact", v, 3, qvec, q) == svc._exact(v, 3, q).collect()
+    svc.close()
+
+
+def test_uncached_search_is_one_single_stage_job(spark, tmp_path, monkeypatch):
+    """Above the driver-matrix gate (bound 0 here) the Spark plan of a
+    search ends at the candidate stage (scan → L2 → top-fetch_k): an
+    uncached exact search runs one job of one stage, and its plan holds
+    no window or aggregate — the per-file dedup, top-k and statistics run
+    on the driver over the collected candidates. The gate's decision is
+    memoised: the level is pulled once, not per request."""
+    from pdf_parse_vector_db_spark import api
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    monkeypatch.setattr(api, "DRIVER_MATRIX_MAX_BYTES", 0)
     path = str(tmp_path / "wh")
     svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
     for i in range(3):
         svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
     svc.search_similar_cases("query.pdf", QUERY, court_level=2)  # memoise the frame
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    sc.setJobGroup("one-search", "uncached exact search")
-    try:
-        resp = svc.search_similar_cases("query.pdf", QUERY + " again", court_level=2)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    assert svc._mats == {(M.head_version(spark, path), 3): None}
+    resp, jobs = _search_jobs(spark, svc, QUERY + " again")
     assert resp["result_count"] == 3
-    jsc.listenerBus().waitUntilEmpty(30_000)
-    (job,) = [int(j) for j in sc.statusTracker().getJobIdsForGroup("one-search")]
+    jsc = spark.sparkContext._jsc.sc()
+    (job,) = jobs
     data = jsc.statusStore().job(job)
     assert data.numCompletedStages() == 1 and data.numSkippedStages() == 0
     sql = spark._jsparkSession.sharedState().statusStore()
@@ -612,6 +649,47 @@ def test_uncached_search_is_one_single_stage_job(spark, tmp_path):
     executed = plans[0].split("InMemoryRelation")[0]
     assert "InMemoryTableScan" in executed
     assert "Scan parquet" not in executed, executed
+    svc.close()
+
+
+def test_wrong_length_embedding_keeps_the_level_on_sql(spark, tmp_path, monkeypatch):
+    """A level holding an embedding that is not `dim` elements (here a
+    foreign commit_append of a short one) stays on the SQL statement:
+    Spark gives that row a NULL dist and orders it first, which the
+    driver matrix cannot. The response is the SQL path's, byte for
+    byte."""
+    import json
+
+    from pyspark.sql import functions as F
+
+    from pdf_parse_vector_db_spark import api
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    path = str(tmp_path / "wh")
+    svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(3):
+        svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    short = (
+        svc._chunks()
+        .filter(F.col("file_name") == "case_0.pdf")
+        .limit(1)
+        .withColumn("chunk_id", F.col("chunk_id") + 999)
+        .withColumn("embedding", F.slice("embedding", 1, svc.dim - 1))
+        .withColumn("file_name", F.lit("foreign.pdf"))
+        .withColumn("file_id", F.sha2(F.lit("foreign.pdf"), 256))
+    )
+    M.commit_append(spark, path, short, partition_by=("court_level",),
+                    stats_cols=("file_id",))
+    v = M.head_version(spark, path)
+    got = svc.search_similar_cases("query.pdf", QUERY, court_level=2)
+    assert svc._mats == {(v, 3): None}
+    assert got["result_count"] == 4
+    assert "score" not in got["results"][0]  # the NULL dist sorts first
+    monkeypatch.setattr(api, "DRIVER_MATRIX_MAX_BYTES", 0)
+    with SparkVectorService(spark, path, manifested=True) as sql_side:
+        want = sql_side.search_similar_cases("query.pdf", QUERY, court_level=2)
+    assert json.dumps(got) == json.dumps(want)
+    svc.close()
 
 
 def test_level_frame_cache_lifecycle(spark, tmp_path):
@@ -619,7 +697,9 @@ def test_level_frame_cache_lifecycle(spark, tmp_path):
     version's frame evicts it: unpersisted, its view dropped. Over
     ingest → search cycles the cache holds at most one frame per level
     searched. A statement analysed over a frame that is evicted before it
-    runs still returns what a fresh service answers at that version."""
+    runs still returns what a fresh service answers at that version. The
+    driver matrix lives and goes with its frame, and close() releases
+    every frame, view and matrix the service holds."""
     import json
 
     from pyspark import StorageLevel
@@ -627,8 +707,11 @@ def test_level_frame_cache_lifecycle(spark, tmp_path):
     from pdf_parse_vector_db_spark.operators import knn
     from pdf_parse_vector_db_spark.sources import manifest as M
 
+    def views() -> set:
+        return {t.name for t in spark.catalog.listTables() if t.name.startswith("svc_")}
+
     persisted = spark.sparkContext._jsc.getPersistentRDDs
-    base = persisted().size()
+    base, base_views = persisted().size(), views()
     path = str(tmp_path / "wh")
     svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
     for i in range(2):
@@ -638,16 +721,16 @@ def test_level_frame_cache_lifecycle(spark, tmp_path):
     frame, view = svc._frames[(v, 3)]
     assert frame.storageLevel != StorageLevel.NONE
     assert spark.catalog.tableExists(view)
+    assert set(svc._mats) == {(v, 3)} and svc._mats[(v, 3)] is not None
 
     held_text = QUERY + " held"
     version, target = svc._request(held_text, 2, "exact")
     held = svc._exact(version, target, svc._embed(held_text)[1])
-    want = SparkVectorService(spark, path, manifested=True).search_similar_cases(
-        "query.pdf", held_text, court_level=2
-    )
+    with SparkVectorService(spark, path, manifested=True) as fresh:
+        want = fresh.search_similar_cases("query.pdf", held_text, court_level=2)
     svc.ingest_legal_document("case_2.pdf", QUERY, court_level=3)
     svc.search_similar_cases("query.pdf", QUERY + " next", court_level=2)
-    assert set(svc._frames) == {(v + 1, 3)}
+    assert set(svc._frames) == set(svc._mats) == {(v + 1, 3)}
     assert frame.storageLevel == StorageLevel.NONE
     assert not spark.catalog.tableExists(view)
     got = knn.search_response_rows(held.collect(), "query.pdf", 2, 5)
@@ -658,6 +741,11 @@ def test_level_frame_cache_lifecycle(spark, tmp_path):
         resp = svc.search_similar_cases("query.pdf", QUERY + f" cycle {i}", court_level=2)
         assert resp["result_count"] == min(5, 4 + i)
         assert persisted().size() <= base + 1
+
+    svc.close()
+    assert persisted().size() == base
+    assert views() == base_views
+    assert svc._frames == {} and svc._mats == {}
 
 
 def test_sql_l2_fold_matches_l2_distance(spark):
@@ -692,3 +780,99 @@ def test_sql_l2_fold_matches_l2_distance(spark):
     a = {r.id: (r.d.hex(), r.s) for r in got.collect()}
     b = {r.id: (r.d.hex(), r.s) for r in want.collect()}
     assert len(a) == 300 and a == b
+
+
+def test_driver_matrix_fold_matches_l2_distance(spark):
+    """The driver matrix computes the same doubles, bit for bit, as
+    l2_distance on stored float32 vectors, and its candidates are the
+    SQL statement's rows: the (dist, chunk_id) top-fetch_k, ties at the
+    cut included, with Spark's 4-dp score."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from pdf_parse_vector_db_spark.api import _candidate_sql, _LevelMatrix
+    from pdf_parse_vector_db_spark.functions.vector import l2_distance
+
+    rng = np.random.default_rng(20261019)
+    vecs = rng.standard_normal((300, 64)).astype(np.float32)
+    vecs[::7] *= 1e-3  # small distances stress the rounding of the sum
+    qvec = [float(x) for x in rng.standard_normal(64).astype(np.float32)]
+    rank = np.argsort(np.linalg.norm(vecs.astype(np.float64) - qvec, axis=1))
+    vecs[rank[110:120]] = vecs[rank[95]]  # equal distances across the cut
+    q = "array(" + ", ".join(f"{x!r}D" for x in qvec) + ")"
+    ids = rng.permutation(10_000)[:300]
+    df = spark.createDataFrame(
+        [
+            (int(c), f"f{i % 40}", f"f{i % 40}.pdf", None if i % 9 else "won",
+             [float(x) for x in v])
+            for i, (c, v) in enumerate(zip(ids, vecs))
+        ],
+        "chunk_id long, file_id string, file_name string, case_decision string, "
+        "embedding array<float>",
+    )
+    mat = _LevelMatrix.pull(df, 64)
+    want = (
+        df.withColumn("__q", F.expr(q))
+        .select("chunk_id", l2_distance(F.col("embedding"), F.col("__q")).alias("d"))
+        .collect()
+    )
+    got = dict(zip(mat.chunk_id.tolist(), mat.dist(qvec).tolist()))
+    assert len(got) == 300
+    assert {r.chunk_id: r.d.hex() for r in want} == {c: d.hex() for c, d in got.items()}
+    df.createOrReplaceTempView("matrix_fold_level")
+    try:
+        rows = spark.sql(_candidate_sql("matrix_fold_level", q)).collect()
+    finally:
+        spark.catalog.dropTempView("matrix_fold_level")
+    cut = sorted(got.values())[99]
+    assert sum(d == cut for d in got.values()) > 1  # ties straddle the cut
+    assert [r.asDict() for r in mat.candidates(qvec)] == [r.asDict() for r in rows]
+
+
+def test_concurrent_searches_pull_the_matrix_once(spark, tmp_path, monkeypatch):
+    """Requests racing on a fresh version share one matrix: eight threads
+    (more than the cores) searching one level at once pull it exactly
+    once, and each answers what the SQL statement answers."""
+    import sys
+    import threading
+
+    from pdf_parse_vector_db_spark import api
+    from pdf_parse_vector_db_spark.sources import manifest as M
+
+    path = str(tmp_path / "wh")
+    svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(3):
+        svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    v = M.head_version(spark, path)
+    pulls = []
+    real = api._LevelMatrix.pull
+
+    def counting(df, dim):
+        pulls.append(dim)
+        return real(df, dim)
+
+    monkeypatch.setattr(api._LevelMatrix, "pull", staticmethod(counting))
+    texts = [QUERY + f" thread {i}" for i in range(8)]
+    got: dict = {}
+    start = threading.Barrier(len(texts))
+
+    def client(text):
+        start.wait(30)
+        qvec, q = svc._embed(text)
+        got[text] = svc._candidates("exact", v, 3, qvec, q)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(t,)) for t in texts]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(pulls) == 1 and set(got) == set(texts)
+    for text in texts:
+        assert got[text] == svc._exact(v, 3, svc._embed(text)[1]).collect(), text
+    svc.close()

@@ -210,3 +210,39 @@ def test_win_percentage_matches_spark_round(spark):
         assert stats["win_percentage"] == want[(w, v)], (w, v)
         python_round_differs += round(w / v * 100.0, 2) != want[(w, v)]
     assert python_round_differs  # e.g. 1/32: Spark 3.13, round() 3.12
+
+
+def test_score_rounding_matches_spark_round(spark):
+    """_spark_round(x, 4), which gives every exact score served from the
+    driver matrix, equals Spark's round(DOUBLE, 4) on 60k seeded doubles:
+    sqrt-shaped distances over the whole unit-vector range and near 0,
+    constructed .xxxx5 ties and their nextafter neighbours. Spark reads
+    the double's Double.toString, which on JDK 17 is not always the
+    shortest repr the helper reads, so the equality is pinned here."""
+    import numpy as np
+
+    rng = np.random.default_rng(20261019)
+    dists = np.sqrt(rng.uniform(0.0, 4.0, 20_000))
+    small = np.sqrt(rng.uniform(0.0, 1e-6, 5_000))
+    ties = (rng.integers(0, 20_000, 10_000) + 0.5) / 1e4
+    xs = np.concatenate([
+        dists,
+        small,
+        ties,
+        np.nextafter(ties, 0.0),
+        np.nextafter(ties, 3.0),
+        np.nextafter(dists[:2_500], 0.0),
+        np.nextafter(dists[:2_500], 3.0),
+    ]).tolist()
+    assert len(xs) >= 50_000
+    got = [knn._spark_round(x, 4) for x in xs]
+    want = [
+        r.s
+        for r in spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+        .select("i", F.round("x", 4).alias("s"))
+        .orderBy("i")
+        .collect()
+    ]
+    bad = [(x, g, w) for x, g, w in zip(xs, got, want) if g != w]
+    assert not bad, bad[:5]
+    assert sum(round(x, 4) != w for x, w in zip(xs, want))  # round() differs

@@ -124,3 +124,26 @@ def test_service_ivf_build_honors_the_gate(spark, tmp_path):
     assert any("CartesianProduct" in p for p in plans), plans
     assert not any("BroadcastExchange" in p for p in plans), plans
     assert got == want
+
+
+def test_incremental_dedup_candidate_broadcast_honors_the_gate(spark, monkeypatch):
+    """incremental_dedup broadcasts its batch-bounded candidate ids only
+    while they fit its byte bound: past it (bound 0, automatic broadcast
+    off as above) the history semi-join plans no BroadcastExchange, and
+    the rows are the ones the default bound gives."""
+    from pdf_parse_vector_db_spark.plans import curation
+
+    def run():
+        df = curation.incremental_dedup(spark, SF)
+        return [tuple(r) for r in df.collect()], _plan(df)
+
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        want, hinted = run()
+        monkeypatch.setattr(curation, "_INC_CANDS_BCAST_MAX_BYTES", 0)
+        got, gated = run()
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert "BroadcastExchange" in hinted, hinted
+    assert "BroadcastExchange" not in gated, gated
+    assert got == want and any(r[3] for r in want)
