@@ -153,7 +153,11 @@ class SparkVectorService:
         #     over DRIVER_MATRIX_MAX_BYTES, or holding a row that is not
         #     exactly `dim` finite elements, memoises None and stays on
         #     the cached SQL statement (_exact). close() releases frames,
-        #     views and matrices.
+        #     views and matrices;
+        #   * the "search" FAIR pool is tagged only around code that can
+        #     submit a job (the memo build and matrix pull in _matrix, the
+        #     SQL or tier collect in _candidates), so a search answered
+        #     from a driver matrix or the response cache makes no JVM call.
         self._frames: dict = {}
         self._mats: dict = {}
         self._frame_lock = threading.Lock()
@@ -265,8 +269,9 @@ class SparkVectorService:
         returns (version, target court level).
 
         Manifested mode exists for MULTI-PROCESS writers, so the local
-        counter is not enough there: it reads the manifest head (one cheap
-        globStatus), which any process's commit advances, and everything
+        counter is not enough there: it reads the manifest head
+        (manifest.head_version: an os.path.exists probe on a local table,
+        no JVM call), which any process's commit advances, and everything
         the request reads after this — the snapshot frame, the tier
         index, the response-cache key — is at that version, so a commit
         landing mid-request cannot file version v+1 rows under key v. Raw
@@ -334,31 +339,37 @@ class SparkVectorService:
         Exact is brute force: in NumPy over the level's driver matrix when
         the level has one (no Spark job), else one SQL statement over its
         cached frame. A Spark plan ends at the top-k: scan → L2 →
-        TakeOrderedAndProject."""
-        if index != "exact":
-            hits = self._tier_candidates(index, version, target, qvec, q).select(
-                *_exprs().hit_cols
-            )
-        else:
+        TakeOrderedAndProject, and only that path is tagged with the
+        "search" pool."""
+        if index == "exact":
             mat = self._matrix(version, target)
             if mat is not None:
                 return mat.candidates(qvec)
-            hits = self._exact(version, target, q)
-        return hits.collect()
+        with scoped_pool(self.spark, "search"):
+            if index == "exact":
+                hits = self._exact(version, target, q)
+            else:
+                hits = self._tier_candidates(index, version, target, qvec, q)
+                hits = hits.select(*_exprs().hit_cols)
+            return hits.collect()
 
     def _matrix(self, version: int, level: int) -> _LevelMatrix | None:
         """The memoised level's driver matrix, pulled on first use; None
         keeps the search on SQL: raw mode, a late request (its frame is
         not memoised) or a level the gate keeps out, a decision memoised
-        with the entry so such a level is not pulled again."""
+        with the entry so such a level is not pulled again. A lookup that
+        finds the entry makes no JVM call; the frame build and pull run in
+        the "search" pool."""
         if not self.manifested:
             return None
+        key = (version, level)
         with self._frame_lock:
-            df, view = self._memo(version, level)
-            if view is None:
-                return None
-            key = (version, level)
-            if key not in self._mats:
+            if key in self._mats:  # a matrix entry implies its frame's
+                return self._mats[key]
+            with scoped_pool(self.spark, "search"):
+                df, view = self._memo(version, level)
+                if view is None:
+                    return None
                 self._mats[key] = _LevelMatrix.pull(df, self.dim)
             return self._mats[key]
 
@@ -452,8 +463,7 @@ class SparkVectorService:
         if out is not None:
             return out
         qvec, q = self._embed(text)
-        with scoped_pool(self.spark, "search"):
-            rows = self._candidates(index, version, target, qvec, q)
+        rows = self._candidates(index, version, target, qvec, q)
         out = knn.search_response_rows(rows, file_name, court_level, int(top_k))
         self._remember(key, out)
         return out
@@ -521,8 +531,7 @@ class SparkVectorService:
             raise ValueError("batch_size must be >= 1")
         version, target = self._request(text, court_level, index)
         qvec, q = self._embed(text)
-        with scoped_pool(self.spark, "search"):
-            rows = self._candidates(index, version, target, qvec, q)
+        rows = self._candidates(index, version, target, qvec, q)
         ranked = [hits[0].asDict() for hits in knn.best_per_file(rows)]
 
         def pages():
@@ -555,8 +564,7 @@ class SparkVectorService:
             raise ValueError("limit and group_size must be >= 1")
         version, target = self._request(text, court_level, index)
         qvec, q = self._embed(text)
-        with scoped_pool(self.spark, "search"):
-            rows = self._candidates(index, version, target, qvec, q)
+        rows = self._candidates(index, version, target, qvec, q)
         groups = [
             {
                 "file_id": hits[0].file_id,

@@ -274,50 +274,3 @@ def shingles_sql(text_col: str, n: int = 3) -> str:
         f"list_distinct(list_transform(range(1, len({toks}) - {n - 1} + 1), i -> {parts})) "
         f"ELSE [] END"
     )
-
-
-# ---------------------------------------------------------------------------
-# Winnowing fingerprints (rolling-hash document fingerprinting, the
-# Schleimer/Wilkerson/Aiken scheme): hash every char k-gram, then keep the
-# minimum of each sliding window of w hashes — guarantees any shared
-# substring of length ≥ k+w-1 yields a shared fingerprint. Both sides use
-# md5 so the whole scheme is engine-portable (oracle-checkable).
-# ---------------------------------------------------------------------------
-
-
-def winnow_fingerprints_expr(text_col: str, k: int = 8, w: int = 4) -> Column:
-    """array<string> of distinct winnowed fingerprints, document order of
-    first occurrence irrelevant (array_distinct of window minima).
-
-    REFERENCE SEMANTICS ONLY (tests, short strings): the gram array inlines
-    into every window position, so hashing is O(n·w·k) per row at best and
-    engine-dependent at worst. The production path is
-    plans/textanalysis._winnow_fps — lambda-bound per-document array
-    algebra computing each gram hash exactly once, map-side."""
-    canon = f"lower(trim(regexp_replace({text_col}, '\\\\s+', ' ')))"
-    grams = (
-        f"transform(sequence(1, greatest(length({canon}) - {k - 1}, 0)), "
-        f"p -> md5(substring({canon}, p, {k})))"
-    )
-    return F.expr(
-        f"CASE WHEN length({canon}) >= {k + w - 1} THEN "
-        f"array_distinct(transform(sequence(1, length({canon}) - {k + w - 2}), "
-        f"p -> array_min(slice({grams}, p, {w})))) "
-        f"WHEN length({canon}) >= {k} THEN array(array_min({grams})) "
-        f"ELSE array() END"
-    )
-
-
-def winnow_fingerprints_sql(text_col: str, k: int = 8, w: int = 4) -> str:
-    canon = f"lower(trim(regexp_replace({text_col}, '\\s+', ' ', 'g')))"
-    grams = (
-        f"list_transform(range(1, greatest(length({canon}) - {k - 1}, 0) + 1), "
-        f"p -> md5(substring({canon}, p, {k})))"
-    )
-    return (
-        f"CASE WHEN length({canon}) >= {k + w - 1} THEN "
-        f"list_distinct(list_transform(range(1, length({canon}) - {k + w - 2} + 1), "
-        f"p -> list_min(({grams})[p : p + {w - 1}]))) "
-        f"WHEN length({canon}) >= {k} THEN [list_min({grams})] "
-        f"ELSE [] END"
-    )

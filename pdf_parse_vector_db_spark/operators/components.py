@@ -212,6 +212,13 @@ def connected_components_star(
         if new_fp == fp:
             break
         fp = new_fp
+    else:
+        # the same LOUD cap as connected_components: a truncated
+        # contraction leaves non-root edges, so its labels are wrong
+        raise ValueError(
+            f"connected_components_star did not converge within "
+            f"{MAX_ITERATIONS} rounds"
+        )
     # at fixpoint every non-root points straight at its component root
     labels = edges.groupBy("u").agg(F.min("v").alias("component_id"))
     return (

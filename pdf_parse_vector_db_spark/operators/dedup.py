@@ -31,7 +31,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pdf_parse_vector_db_spark.functions.text import fingerprint_expr, shingles_expr
-from pdf_parse_vector_db_spark.functions.vector import cosine_similarity
 
 
 # ---------------------------------------------------------------------------
@@ -437,14 +436,6 @@ def simhash_packed_expr(text_col: str) -> Column:
     return F.expr(
         f"element_at(transform(array({votes}), "
         f"__vt -> shiftleft({hi}, 32) | {lo}), 1)"
-    )
-
-
-def hamming_expr(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.when(x != y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
     )
 
 

@@ -175,12 +175,6 @@ def build_chunks(spark: SparkSession, sf_dir: str, with_embeddings: bool = True)
     return chunks.select(*cols)
 
 
-def write_chunks(chunks: DataFrame, path: str) -> None:
-    """S6 append sink, partitioned for search-path partition pruning.
-    flush() (S7) has no analog: Parquet job commits are atomic."""
-    chunks.write.mode("append").partitionBy("court_level").parquet(path)
-
-
 def ingest_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk pipeline minus the (non-SQL-expressible) embedding column —
     oracle-checked end to end against DuckDB."""

@@ -912,23 +912,6 @@ ANALYZER_STOPWORDS = (
 ).split()
 
 
-def _analyzed_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, dl, term) under the standard analyzer. dl counts the
-    SURVIVING tokens (BM25's length normalization must see the same
-    token stream the scorer sees)."""
-    docs = load_table(spark, sf_dir, "documents", spread=True)
-    toks = docs.select(
-        "doc_id",
-        F.filter(
-            F.split(F.lower(F.col("text")), r"[^a-z0-9]+"),
-            lambda t: (t != "") & ~t.isin(ANALYZER_STOPWORDS),
-        ).alias("toks"),
-    )
-    return toks.select(
-        "doc_id", F.size("toks").alias("dl"), F.explode("toks").alias("term")
-    )
-
-
 def bm25_analyzed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 under the STANDARD ANALYZER (round 10): the Milvus 2.5
     full-text-search scoring stack — lowercase, non-alphanumeric split,

@@ -56,16 +56,6 @@ _IVF_SEED_MOD_SQL = (
 _IVF_KEY_BASE = 10_000_000
 
 
-def _ivf_seed_mod(emb: DataFrame) -> int:
-    """Adaptive seed stride: max(_IVF_SEED_MOD, isqrt(N)) ⇒ nlist ∝ √N.
-    One count() job per query (parquet footer metadata, cheap); the
-    literal stride then folds into the seed filter and the SQL twin
-    computes the identical value from the same count."""
-    from math import isqrt
-
-    return max(_IVF_SEED_MOD, isqrt(emb.count()))
-
-
 def _ivf_seeds(emb: DataFrame) -> DataFrame:
     """Pinned coarse quantizer: every √N-strided vector is a cell seed
     (nlist ∝ √N, the standard IVF sizing). The (distance-micros, cid)

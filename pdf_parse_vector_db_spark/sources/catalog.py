@@ -11,7 +11,8 @@ field-by-field DDL) → create_index → load_collection (pin in memory)
                           PARTITIONED BY (court_level)
   create_index(IVF)     → operators/ann.build_ivf + write_ivf (partition
                           layout IS the index; no separate structure)
-  load_collection       → CACHE TABLE (lazy; pins on first scan)
+  load_collection       → a plain CACHE TABLE statement (lazy; pins on
+                          first scan)
   insert + flush        → INSERT INTO / append write (job commit is the
                           durability barrier — S7 is a no-op)
 
@@ -55,12 +56,6 @@ def ensure_chunks_table(
         f"USING parquet PARTITIONED BY (court_level){loc}"
     )
     return not existed
-
-
-def load_table_cache(spark: SparkSession, name: str = CHUNKS_TABLE) -> None:
-    """S5 tail: `load_collection` analog — pin the table in executor memory
-    (lazy: materializes on first scan, like Milvus' async load)."""
-    spark.sql(f"CACHE TABLE {name}")
 
 
 def append_chunks(chunks: DataFrame, name: str = CHUNKS_TABLE) -> None:

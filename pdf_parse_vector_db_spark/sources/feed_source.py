@@ -29,7 +29,6 @@ manifest layer never renames).
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -43,18 +42,13 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from pdf_parse_vector_db_spark.sources.manifest import local_head_version
+
 _MANIFESTS = "_manifests"
 
 
 def _local(path: str) -> str:
     return path[5:] if path.startswith("file:") else path
-
-
-def _head_version(table: str) -> int:
-    best = 0
-    for p in glob.glob(os.path.join(_local(table), _MANIFESTS, "v*.json")):
-        best = max(best, int(os.path.basename(p)[1:-5]))
-    return best
 
 
 def _read_manifest(table: str, version: int) -> dict:
@@ -173,7 +167,7 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:
-        head = _head_version(self.table)
+        head = local_head_version(_local(self.table))
         if self.max_commits is None:
             return {"version": head}
         if self._cursor is None:
@@ -282,7 +276,7 @@ def _py_commit_append(
     mdir = os.path.join(root, _MANIFESTS)
     os.makedirs(mdir, exist_ok=True)
     for attempt in range(20):
-        head = _head_version(table)
+        head = local_head_version(_local(table))
         prev = (
             _read_manifest(table, head)
             if head
@@ -436,7 +430,9 @@ class ManifestSnapshotReader(DataSourceReader):
         self.table = options["table"]
         self.schema = schema
         v = options.get("version")
-        self.version = int(v) if v is not None else _head_version(self.table)
+        self.version = (
+            int(v) if v is not None else local_head_version(_local(self.table))
+        )
 
     def partitions(self):
         commits = (
@@ -512,7 +508,7 @@ class ManifestFeedDataSource(DataSource):
         from pyspark.sql.pandas.types import from_arrow_schema
 
         table = self.options["table"]
-        head = _head_version(table)
+        head = local_head_version(_local(table))
         if head == 0:
             raise ValueError(
                 f"manifest_feed needs at least one commit to infer a schema "

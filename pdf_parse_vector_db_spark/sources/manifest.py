@@ -26,7 +26,10 @@ that protocol's minimal correct core, on the Hadoop FileSystem API:
   * readers find the highest version (``head_version``: a forward probe
     from the last head seen, else a listing of ``_manifests``) and read
     exactly that manifest's file list — a true snapshot: no vanish
-    window, no partial append, no dependence on directory mtimes.
+    window, no partial append, no dependence on directory mtimes. The
+    probe runs in Python with os.path.exists on a ``file`` table (no JVM
+    call) and with fs.exists through a cached Hadoop FileSystem on any
+    other scheme (HDFS, object stores).
   * replace-commits (compaction, deletion rewrites) stage new files and
     publish a manifest that drops the replaced ones; the files
     themselves are deleted later by ``vacuum`` (only files unreferenced
@@ -61,7 +64,10 @@ clock (probe-file mtime), never the local host clock.
 
 from __future__ import annotations
 
+import functools
+import glob
 import json
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -92,36 +98,94 @@ def _has_part_files(jvm, fs, path: str) -> bool:
     return False
 
 
-#: the last head read per table path. Only a hint: head_version checks it
-#: against the files on every read, so a stale value costs a few more
-#: probes or a glob, never a wrong answer.
+#: the last head read per manifests dir: its local path on a ``file``
+#: table, else its qualified URI. Only a hint: every read checks it against
+#: the files, so a stale value costs a few more probes or a listing, never
+#: a wrong answer.
 _HEAD_HINTS: dict[str, int] = {}
+
+#: each table's head reader per session (_head_reader), so a head read
+#: rebuilds no Path or FileSystem over the gateway: (jsc, reader). Keyed
+#: by (id(jsc), table), as a JavaObject's hash is itself a gateway call;
+#: the entry holds its jsc, so the id stays that object's and the
+#: identity check holds.
+_HEAD_READERS: dict[tuple[int, str], tuple] = {}
+
+
+def _head_reader(spark: SparkSession, table: str):
+    """A zero-argument head read of `table`, built from one Hadoop
+    resolution (FileSystem, scheme, qualified path) and memoised."""
+    jsc = spark._jsc
+    entry = _HEAD_READERS.get((id(jsc), table))
+    if entry is not None and entry[0] is jsc:
+        return entry[1]
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(table).getFileSystem(jsc.hadoopConfiguration())
+    qualified = fs.makeQualified(Path(table))
+    if fs.getUri().getScheme() in (None, "file"):
+        read = functools.partial(local_head_version, qualified.toUri().getPath())
+    else:
+        mdir = Path(qualified, _MANIFESTS)
+        key = mdir.toString()
+
+        def read() -> int:
+            return _probe_head(
+                key,
+                lambda v: fs.exists(Path(mdir, f"v{v}.json")),
+                lambda: [
+                    int(st.getPath().getName()[1:-5])  # v{N}.json
+                    for st in fs.globStatus(Path(mdir, "v*.json")) or []
+                ],
+            )
+
+    _HEAD_READERS[(id(jsc), table)] = (jsc, read)
+    return read
+
+
+def _probe_head(key: str, exists, listing) -> int:
+    """The hinted head probe over one manifests dir. Versions are dense:
+    every commit publishes head + 1, and vacuum drops only manifests below
+    the ones it keeps, head included. So from the last head seen, h, while
+    v{h}.json still exists the head is the last of v{h+1}, v{h+2}, ...
+    that exists (`exists(v)`). The listing (`listing()`: every
+    v{N}.json's N) runs only without a usable hint: the first read, or
+    v{h}.json vacuumed or the table recreated."""
+    head = _HEAD_HINTS.get(key, 0)
+    if head and exists(head):
+        while exists(head + 1):
+            head += 1
+    else:
+        head = max(listing(), default=0)
+    _HEAD_HINTS[key] = head
+    return head
+
+
+def local_head_version(table: str) -> int:
+    """head_version of a table on the local disk, `table` a plain path:
+    the hinted probe with os.path.exists, else a glob of its manifests.
+    No JVM: the manifest_feed source (which has no SparkSession) reads its
+    heads here too."""
+    mdir = os.path.join(table, _MANIFESTS)
+    return _probe_head(
+        mdir,
+        lambda v: os.path.exists(f"{mdir}/v{v}.json"),
+        lambda: [
+            int(os.path.basename(p)[1:-5])  # v{N}.json
+            for p in glob.glob(os.path.join(glob.escape(mdir), "v*.json"))
+        ],
+    )
 
 
 def head_version(spark: SparkSession, table: str) -> int:
-    """Highest committed manifest version (0 = empty table).
-
-    Versions are dense: every commit publishes head + 1, and vacuum drops
-    only manifests below the ones it keeps, head included. So from the
-    last head seen, h, while v{h}.json still exists the head is the last
-    of v{h+1}, v{h+2}, ... that exists: a constant number of gateway calls
-    per read, where the glob's listing costs about four calls per
-    manifest and the service never vacuums. The glob runs only without a
-    usable hint (the first read, or v{h}.json vacuumed or the table
-    recreated)."""
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    fs = Path(table).getFileSystem(spark._jsc.hadoopConfiguration())
-    head = _HEAD_HINTS.get(table, 0)
-    if head and fs.exists(Path(f"{table}/{_MANIFESTS}/v{head}.json")):
-        while fs.exists(Path(f"{table}/{_MANIFESTS}/v{head + 1}.json")):
-            head += 1
-    else:
-        head = 0
-        for st in fs.globStatus(Path(f"{table}/{_MANIFESTS}/v*.json")) or []:
-            head = max(head, int(st.getPath().getName()[1:-5]))  # v{N}.json
-    _HEAD_HINTS[table] = head
-    return head
+    """Highest committed manifest version (0 = empty table), by the hinted
+    probe (_probe_head). The table resolves through Hadoop once per
+    session (_head_reader). A ``file`` table is then probed with
+    os.path.exists on its qualified local path (local_head_version; the
+    driver JVM is a child of this process on the same host, so it sees the
+    same files): no gateway call. Any other scheme probes with fs.exists
+    through the cached handle, two gateway calls per version probed, and
+    lists with one globStatus."""
+    return _head_reader(spark, table)()
 
 
 def _read_manifest(spark: SparkSession, table: str, version: int) -> dict:

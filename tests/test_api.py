@@ -876,3 +876,49 @@ def test_concurrent_searches_pull_the_matrix_once(spark, tmp_path, monkeypatch):
     for text in texts:
         assert got[text] == svc._exact(v, 3, svc._embed(text)[1]).collect(), text
     svc.close()
+
+
+def test_search_from_the_driver_matrix_makes_no_gateway_call(
+    spark, tmp_path, monkeypatch, gateway_calls
+):
+    """Below the driver-matrix gate, once the first search at a version
+    has pulled the matrix, an uncached exact search makes no py4j call:
+    the manifest head is an os.path.exists probe and the FAIR pool is
+    tagged only around code that can submit a job. A response-cache hit
+    makes none either. The pull itself runs in the "search" pool, entered
+    once."""
+    import contextlib
+
+    from pdf_parse_vector_db_spark import api
+
+    path = str(tmp_path / "wh")
+    svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
+    for i in range(3):
+        svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
+    pools = []
+    real = api.scoped_pool
+
+    @contextlib.contextmanager
+    def recording(session, pool):
+        pools.append(pool)
+        with real(session, pool):
+            yield
+
+    monkeypatch.setattr(api, "scoped_pool", recording)
+    svc.search_similar_cases("query.pdf", QUERY, court_level=2)  # pulls the matrix
+    assert pools == ["search"]
+
+    def search():
+        return svc.search_similar_cases("query.pdf", QUERY + " again", court_level=2)
+
+    resp, calls = gateway_calls(search)
+    assert calls == 0 and resp["result_count"] == 3
+    assert (svc.cache_hits, svc.cache_misses) == (0, 2)
+    hit, calls = gateway_calls(search)
+    assert calls == 0 and hit == resp and svc.cache_hits == 1
+    pages, calls = gateway_calls(lambda: list(svc.search_iterator(QUERY, 2)))
+    assert calls == 0 and sum(map(len, pages)) == 3
+    groups, calls = gateway_calls(svc.grouping_search, QUERY, 2)
+    assert calls == 0 and len(groups) == 3
+    assert pools == ["search"]
+    svc.close()

@@ -99,6 +99,19 @@ def test_star_handles_deep_path_graph(spark):
     assert len(got) == 60
 
 
+def test_star_raises_at_its_round_cap(spark, monkeypatch):
+    """Star contraction that exhausts MAX_ITERATIONS raises, as min-label
+    does: one round cannot contract a 10-node path to stars, and the
+    truncated edges would label it as several components."""
+    import pytest
+
+    from pdf_parse_vector_db_spark.operators import components
+
+    monkeypatch.setattr(components, "MAX_ITERATIONS", 1)
+    with pytest.raises(ValueError, match="did not converge"):
+        _resolve_star(spark, [(i, i + 1) for i in range(1, 10)])
+
+
 def test_star_random_graphs_match_union_find(spark):
     import random
 

@@ -10,6 +10,7 @@ never touches retained versions.
 
 from __future__ import annotations
 
+import os
 import threading
 
 import pytest
@@ -1072,29 +1073,14 @@ def test_merge_idempotency_key_exactly_once(spark, tmp_path):
     assert rows[3] == 42 and rows[4] == 42
 
 
-def test_head_version_reads_cost_constant_gateway_calls(spark, tmp_path):
-    """A head read costs the same number of JVM calls at 5 and at 300
-    manifests (a glob of _manifests cost about four per manifest, paid by
-    every manifested search), returns the true max, ignores claim and tmp
-    files, and falls back to the glob when the remembered head is gone."""
-    client = spark.sparkContext._gateway._gateway_client
-    real = client.send_command
-
-    def calls(table):
-        n = [0]
-
-        def counting(*args, **kwargs):
-            n[0] += 1
-            return real(*args, **kwargs)
-
-        client.send_command = counting
-        try:
-            head = M.head_version(spark, table)
-        finally:
-            del client.send_command
-        return head, n[0]
-
-    counts = []
+def test_head_version_reads_cost_constant_gateway_calls(
+    spark, tmp_path, gateway_calls
+):
+    """After a local table's first read, a head read makes no JVM call at
+    5 or at 300 manifests: the table's Hadoop resolution is memoised, and
+    the probe is os.path.exists. It returns the true max, ignores claim
+    and tmp files, and falls back to the glob when the remembered head is
+    gone."""
     for n in (5, 300):
         t = tmp_path / f"t{n}"
         mdir = t / "_manifests"
@@ -1105,13 +1091,37 @@ def test_head_version_reads_cost_constant_gateway_calls(spark, tmp_path):
         (mdir / f"v{n + 1}.json.tmp.abc").write_text("{}")
         assert M.head_version(spark, str(t)) == n  # first read: the glob
         (mdir / f"v{n + 1}.json").write_text("{}")  # a commit lands
-        head, k = calls(str(t))
-        assert head == n + 1
-        counts.append(k)
-    assert counts[0] == counts[1]
+        assert gateway_calls(M.head_version, spark, str(t)) == (n + 1, 0)
     # the remembered head vanished (the table was recreated shorter)
     for p in mdir.iterdir():
         p.unlink()
     for v in (1, 2):
         (mdir / f"v{v}.json").write_text("{}")
     assert M.head_version(spark, str(t)) == 2
+
+
+def test_head_version_agrees_across_path_forms(spark, tmp_path):
+    """A table's plain absolute path, its file: URI and a relative path
+    (relative to the JVM's working directory, as Spark resolves one) read
+    the same head, each sees a commit written straight to v{n+1}.json,
+    and each sees the table recreated with fewer versions."""
+    t = tmp_path / "tbl"
+    mdir = t / "_manifests"
+    mdir.mkdir(parents=True)
+    jvm_cwd = spark._jvm.System.getProperty("user.dir")
+    forms = (str(t), t.as_uri(), os.path.relpath(t, jvm_cwd))
+
+    def write(versions):
+        for p in mdir.iterdir():
+            p.unlink()
+        for v in versions:
+            (mdir / f"v{v}.json").write_text("{}")
+
+    write(range(1, 4))
+    assert [M.head_version(spark, f) for f in forms] == [3, 3, 3]
+    for n, form in enumerate(forms, start=4):
+        (mdir / f"v{n}.json").write_text("{}")
+        assert M.head_version(spark, form) == n
+    assert [M.head_version(spark, f) for f in forms] == [6, 6, 6]
+    write((1, 2))  # recreated shorter
+    assert [M.head_version(spark, f) for f in forms] == [2, 2, 2]

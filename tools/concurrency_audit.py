@@ -90,10 +90,10 @@ def main() -> None:
             svc.search_similar_cases("hot.pdf", DOC + " hot", 2)
         cached_qps = round(200 / (time.perf_counter() - t0), 1)
 
-        # manifested mode pays a head_version globStatus per search (the
-        # round-7 cross-process cache-invalidation fix) + a deepcopy per
-        # cache hit — measure both so the fix's serving cost is a number,
-        # not a guess
+        # manifested mode pays a manifest head read per search (the
+        # round-7 cross-process cache-invalidation fix; on a local table an
+        # os.path.exists probe, no JVM call) + a deepcopy per cache hit —
+        # measure both so the fix's serving cost is a number, not a guess
         man = SparkVectorService(
             spark, os.path.join(tmp, "man_wh"), manifested=True
         )
