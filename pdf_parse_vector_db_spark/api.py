@@ -32,14 +32,15 @@ import uuid
 from types import SimpleNamespace
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from pdf_parse_vector_db_spark.functions.classifiers import case_decision_expr
 from pdf_parse_vector_db_spark.functions.vector import l2_distance, l2_distance_sql
 from pdf_parse_vector_db_spark.operators import knn
-from pdf_parse_vector_db_spark.operators.chunker import chunk_documents, chunk_text
-from pdf_parse_vector_db_spark.operators.embedder import embed_text_py, hashing_embedder
+from pdf_parse_vector_db_spark.operators.chunker import chunk_text
+from pdf_parse_vector_db_spark.operators.embedder import embed_text_py
 from pdf_parse_vector_db_spark.schemas import (
     EMBEDDING_DIM,
     SEARCH_FETCH_K,
@@ -135,9 +136,9 @@ class SparkVectorService:
         #     which spills to disk under memory pressure) and registered as
         #     a temp view under a per-entry uuid name, so the exact
         #     candidate statement reads the level from memory. The first
-        #     scan at the version (the ingest's count or the first search)
-        #     fills the cache inside its own job. Eviction unpersists the
-        #     frame without blocking and drops its view. A request that
+        #     search at the version fills the cache inside its own job (an
+        #     ingest reads nothing back). Eviction unpersists the frame
+        #     without blocking and drops its view. A request that
         #     still holds an evicted frame (or a statement analysed over
         #     its view) recomputes it from the same immutable commit dirs,
         #     so it returns what it would have read from the cache.
@@ -147,13 +148,12 @@ class SparkVectorService:
         #     costs the other a recompute, never a wrong row;
         #   * a memoised level also gets a driver-resident matrix
         #     (_LevelMatrix in _mats), pulled over Arrow at the first exact
-        #     search at the version (an ingest's own level read never
-        #     builds one). It is immutable, so concurrent requests share
-        #     it; it is evicted with its frame; and it is gated: a level
-        #     over DRIVER_MATRIX_MAX_BYTES, or holding a row that is not
-        #     exactly `dim` finite elements, memoises None and stays on
-        #     the cached SQL statement (_exact). close() releases frames,
-        #     views and matrices;
+        #     search at the version. It is immutable, so concurrent
+        #     requests share it; it is evicted with its frame; and it is
+        #     gated: a level over DRIVER_MATRIX_MAX_BYTES, or holding a row
+        #     that is not exactly `dim` finite elements, memoises None and
+        #     stays on the cached SQL statement (_exact). close() releases
+        #     frames, views and matrices;
         #   * the "search" FAIR pool is tagged only around code that can
         #     submit a job (the memo build and matrix pull in _matrix, the
         #     SQL or tier collect in _candidates), so a search answered
@@ -168,7 +168,21 @@ class SparkVectorService:
         self, file_name: str, text: str, court_level: int
     ) -> dict:
         """Validate → classify → chunk → embed → append; returns
-        {chunks_inserted, case_decision} (extract_and_search_v2.py:433-439)."""
+        {chunks_inserted, case_decision} for the rows THIS call inserted
+        (extract_and_search_v2.py:433-439; extract_and_embed.py:118-123
+        answers len(rows) the same way).
+
+        One document's rows are built on the driver with the functions
+        the bulk path's Arrow UDFs call per row (chunk_text,
+        embed_text_py), as the search path embeds its query: over one
+        document, a Spark job through those UDFs spent its time starting
+        a Python worker per operator. The case decision stays the
+        Catalyst cascade, evaluated over a one-row Arrow-backed frame (a
+        local relation, so no job), and Java regex remains the only
+        classifier. The rows are committed as one Arrow-backed frame,
+        whose write job starts no Python worker, and the response is
+        answered from the values written: nothing is read back, so an
+        ingest's job count does not grow with the level's commits."""
         if not file_name or not file_name.lower().endswith(".pdf"):
             raise ValueError("File must be a PDF")
         if not isinstance(court_level, int):
@@ -176,37 +190,45 @@ class SparkVectorService:
         if not text or not text.strip():
             raise ValueError("No text could be extracted from the PDF")
 
+        file_id = hashlib.sha256(file_name.encode()).hexdigest()
         # deterministic doc_id from the file name (hash(), salted per run,
         # would break re-ingest idempotence tests); 48 bits so
         # doc_id * 1000 + chunk_idx stays inside int64 under ANSI arithmetic
-        doc_id = int(hashlib.sha256(file_name.encode()).hexdigest()[:12], 16)
-        docs = self.spark.createDataFrame(
-            [(doc_id, text, int(court_level))], "doc_id long, text string, court_level int"
-        ).withColumn("case_decision", case_decision_expr(F.col("text")))
-
-        chunks = chunk_documents(docs, keep_cols=("court_level", "case_decision"))
-        chunks = (
-            chunks.withColumn("file_name", F.lit(file_name))
-            .withColumn("file_id", F.sha2(F.lit(file_name), 256))
-            .withColumn("chunk_id", F.col("doc_id") * 1000 + F.col("chunk_idx"))
-            .withColumn("embedding", hashing_embedder(self.dim)(F.col("chunk_text")))
-            # the reference drops chunks whose embedding came back empty
-            # (extract_and_embed.py:102,112-113) — e.g. chunker edge (a)'s
-            # empty first chunk
-            .filter(F.col("embedding").isNotNull())
-            .select(
-                "chunk_id",
-                "doc_id",
-                "chunk_idx",
-                F.col("chunk_text").alias("text"),
-                "embedding",
-                "file_name",
-                "file_id",
-                F.col("court_level").cast("tinyint").alias("court_level"),
-                "case_decision",
-            )
-        )
+        doc_id = int(file_id[:12], 16)
+        # chunk_idx counts every chunk, then the reference drops chunks
+        # whose embedding came back empty (extract_and_embed.py:102,
+        # 112-113) — e.g. chunker edge (a)'s empty first chunk leaves a gap
+        rows = [
+            (idx, chunk, emb)
+            for idx, chunk in enumerate(chunk_text(text))
+            if (emb := embed_text_py(chunk, self.dim)) is not None
+        ]
         with scoped_pool(self.spark, "ingest"):
+            # a projection over a local relation folds on the driver: no job
+            (decision,) = (
+                self.spark.createDataFrame(pa.table({"text": [text]}))
+                .select(case_decision_expr(F.col("text")))
+                .collect()[0]
+            )
+            chunks = self.spark.createDataFrame(
+                pa.Table.from_pylist(
+                    [
+                        {
+                            "chunk_id": doc_id * 1000 + idx,
+                            "doc_id": doc_id,
+                            "chunk_idx": idx,
+                            "text": chunk,
+                            "embedding": emb,
+                            "file_name": file_name,
+                            "file_id": file_id,
+                            "court_level": int(court_level),
+                            "case_decision": decision,
+                        }
+                        for idx, chunk, emb in rows
+                    ],
+                    schema=_INGEST_SCHEMA,
+                )
+            ).coalesce(1)  # one file per level: a local scan splits per row
             with self._write_lock:
                 if self.manifested:
                     from pdf_parse_vector_db_spark.sources import manifest as M
@@ -242,23 +264,7 @@ class SparkVectorService:
                         self.path
                     )
                     self._version += 1  # invalidates every cached search
-                # the version this ingest published (counted there, not at
-                # whatever head a later foreign commit made); the level's
-                # frame is the one this level's next search reuses
-                version = self._version
-            # the file's few rows come back whole: an aggregate would plan
-            # an exchange, and adaptive execution then fills the frame's
-            # cache in a job of its own instead of inside this scan
-            written = (
-                self._level(version, int(court_level))
-                .filter(F.col("file_id") == F.sha2(F.lit(file_name), 256))
-                .select("case_decision")
-                .collect()
-            )
-        return {
-            "chunks_inserted": len(written),
-            "case_decision": written[0].case_decision if written else None,
-        }
+        return {"chunks_inserted": len(rows), "case_decision": decision}
 
     # -- read path ---------------------------------------------------------
 
@@ -1234,6 +1240,23 @@ class SparkVectorService:
     def __exit__(self, *exc) -> None:
         self.close()
 
+
+#: an ingested chunk row: schemas.CHUNKS_SCHEMA's order and types, with
+#: the nullability the parquet files of single-document ingests have always
+#: had (file_name and file_id required); court_level is the partition column
+_INGEST_SCHEMA = pa.schema(
+    [
+        ("chunk_id", pa.int64()),
+        ("doc_id", pa.int64()),
+        ("chunk_idx", pa.int32()),
+        ("text", pa.string()),
+        ("embedding", pa.list_(pa.float32())),
+        pa.field("file_name", pa.string(), nullable=False),
+        pa.field("file_id", pa.string(), nullable=False),
+        ("court_level", pa.int8()),
+        ("case_decision", pa.string()),
+    ]
+)
 
 #: candidate-stage tiers every search entry point routes through
 _TIERS = ("exact", "ivf", "graph", "bq", "sq8")

@@ -28,6 +28,109 @@ def test_ingest_returns_counts_and_decision(svc):
     assert out["case_decision"] in DECISIONS
 
 
+def test_reingest_reports_this_calls_rows(spark, tmp_path):
+    """A second ingest of one file name answers the rows THAT call
+    inserted, as the reference answers len(rows) (extract_and_embed.py:
+    118-123), not every row the level holds for the file; both copies
+    are stored, in raw and in manifested mode."""
+    from pyspark.sql import functions as F
+
+    from pdf_parse_vector_db_spark.operators.chunker import chunk_text
+
+    for manifested in (False, True):
+        svc = SparkVectorService(
+            spark, str(tmp_path / f"wh_{manifested}"), manifested=manifested
+        )
+        first = svc.ingest_legal_document("case_r.pdf", DOC, court_level=3)
+        second = svc.ingest_legal_document("case_r.pdf", DOC, court_level=3)
+        assert first == second == {
+            "chunks_inserted": len(chunk_text(DOC)),
+            "case_decision": "appellant_won",
+        }, manifested
+        stored = svc._chunks().filter(F.col("file_name") == "case_r.pdf").count()
+        assert stored == 2 * first["chunks_inserted"], manifested
+        svc.close()
+
+
+def test_ingest_rows_match_the_spark_plan_bit_for_bit(spark, tmp_path):
+    """The rows an ingest builds on the driver are, column for column and
+    embedding float for float, the rows the Spark plan of the bulk path
+    (chunk_documents + hashing_embedder, the same select) builds for the
+    document, in raw and manifested mode, with the same stored schema
+    (court_level reads back as int from its partition directory). The
+    document has chunker edge (a), an over-budget first paragraph whose
+    empty chunk 0 is dropped and leaves a gap, and edge (b), a single
+    over-budget paragraph kept whole."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from pdf_parse_vector_db_spark.functions.classifiers import case_decision_expr
+    from pdf_parse_vector_db_spark.operators.chunker import chunk_documents
+    from pdf_parse_vector_db_spark.operators.embedder import hashing_embedder
+    from pdf_parse_vector_db_spark.schemas import CHUNK_MAX_TOKENS
+
+    over = CHUNK_MAX_TOKENS + 50
+    text = "\n\n".join(
+        [
+            " ".join(f"a{i}" for i in range(over)),  # edge (a)
+            "A short paragraph: appeal dismissed.",
+            "Another short paragraph. " * 8,
+            " ".join(f"b{i}" for i in range(2 * over)),  # edge (b)
+            "The tail paragraph.",
+        ]
+    )
+    name, level = "multi.pdf", 2
+    doc_id = int(hashlib.sha256(name.encode()).hexdigest()[:12], 16)
+    docs = spark.createDataFrame(
+        [(doc_id, text, level)], "doc_id long, text string, court_level int"
+    ).withColumn("case_decision", case_decision_expr(F.col("text")))
+    plan = (
+        chunk_documents(docs, keep_cols=("court_level", "case_decision"))
+        .withColumn("file_name", F.lit(name))
+        .withColumn("file_id", F.sha2(F.lit(name), 256))
+        .withColumn("chunk_id", F.col("doc_id") * 1000 + F.col("chunk_idx"))
+        .withColumn("embedding", hashing_embedder()(F.col("chunk_text")))
+        .filter(F.col("embedding").isNotNull())
+        .select(
+            "chunk_id",
+            "doc_id",
+            "chunk_idx",
+            F.col("chunk_text").alias("text"),
+            "embedding",
+            "file_name",
+            "file_id",
+            F.col("court_level").cast("tinyint").alias("court_level"),
+            "case_decision",
+        )
+    )
+    want_path = str(tmp_path / "want")
+    plan.write.partitionBy("court_level").parquet(want_path)
+    want_df = spark.read.parquet(want_path)
+
+    def cells(df) -> list[dict]:
+        """Every row in chunk_id order, embeddings as float.hex strings."""
+        rows = [r.asDict() for r in df.orderBy("chunk_id").collect()]
+        for row in rows:
+            row["embedding"] = [x.hex() for x in row["embedding"]]
+        return rows
+
+    want = cells(want_df)
+    assert [r["chunk_idx"] for r in want] == [1, 2, 3, 4]  # edge (a)'s chunk 0 is gone
+    assert len(want[2]["text"].split()) == 2 * over  # edge (b) is one chunk
+    for manifested in (False, True):
+        svc = SparkVectorService(
+            spark, str(tmp_path / f"wh_{manifested}"), manifested=manifested
+        )
+        out = svc.ingest_legal_document(name, text, court_level=level)
+        assert out == {"chunks_inserted": 4, "case_decision": "appellant_lost"}
+        got = svc._chunks()
+        assert got.schema == want_df.schema, manifested
+        assert dict(got.dtypes)["court_level"] == "int"
+        assert cells(got) == want, manifested
+        svc.close()
+
+
 def test_ingest_validation_mirrors_reference(svc):
     with pytest.raises(ValueError, match="PDF"):
         svc.ingest_legal_document("notes.txt", DOC, court_level=2)
@@ -573,18 +676,49 @@ def test_negative_top_k_is_a_validation_error(svc):
     }
 
 
-def _search_jobs(spark, svc, text: str) -> tuple[dict, list[int]]:
-    """An uncached exact search run in a job group of its own: (response,
-    the ids of the Spark jobs it ran)."""
+def _jobs_of(spark, fn) -> tuple:
+    """fn() run in a Spark job group of its own: (fn's result, the ids of
+    the Spark jobs it ran)."""
+    import uuid
+
     sc = spark.sparkContext
-    sc.setJobGroup("one-search", "uncached exact search")
+    group = f"one-request-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "one service request")
     try:
-        resp = svc.search_similar_cases("query.pdf", text, court_level=2)
+        out = fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return resp, [int(j) for j in sc.statusTracker().getJobIdsForGroup("one-search")]
+    return out, [int(j) for j in sc.statusTracker().getJobIdsForGroup(group)]
+
+
+def _search_jobs(spark, svc, text: str) -> tuple[dict, list[int]]:
+    """An uncached exact search run in a job group of its own: (response,
+    the ids of the Spark jobs it ran)."""
+    return _jobs_of(
+        spark, lambda: svc.search_similar_cases("query.pdf", text, court_level=2)
+    )
+
+
+def test_ingest_job_count_does_not_grow_with_commits(spark, tmp_path):
+    """An ingest reads nothing back: with compaction off, the 2nd and the
+    12th ingest into one manifested service run the same few Spark jobs,
+    however many commits the level already holds."""
+    svc = SparkVectorService(
+        spark, str(tmp_path / "wh"), manifested=True, auto_compact_commits=0
+    )
+    jobs = []
+    for i in range(12):
+        _, ran = _jobs_of(
+            spark,
+            lambda: svc.ingest_legal_document(
+                f"case_{i}.pdf", DOC + f" variant {i}", court_level=3
+            ),
+        )
+        jobs.append(len(ran))
+    assert jobs[1] == jobs[11] <= 4, jobs
+    svc.close()
 
 
 def test_uncached_search_below_the_gate_runs_no_spark_job(spark, tmp_path):
@@ -599,7 +733,7 @@ def test_uncached_search_below_the_gate_runs_no_spark_job(spark, tmp_path):
     for i in range(3):
         svc.ingest_legal_document(f"case_{i}.pdf", DOC + f" variant {i}", court_level=3)
     v = M.head_version(spark, path)
-    assert svc._mats == {}  # an ingest's level read builds no matrix
+    assert svc._mats == {}  # an ingest builds no matrix
     svc.search_similar_cases("query.pdf", QUERY, court_level=2)  # pull the matrix
     assert svc._mats[(v, 3)] is not None
     resp, jobs = _search_jobs(spark, svc, QUERY + " again")
