@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from pdf_parse_vector_db_spark.functions.classifiers import case_decision_expr
 from pdf_parse_vector_db_spark.functions.vector import l2_distance, l2_distance_sql
-from pdf_parse_vector_db_spark.operators import knn
+from pdf_parse_vector_db_spark.operators import driver, knn
 from pdf_parse_vector_db_spark.operators.chunker import chunk_text
 from pdf_parse_vector_db_spark.operators.embedder import embed_text_py
 from pdf_parse_vector_db_spark.schemas import (
@@ -150,10 +150,11 @@ class SparkVectorService:
         #     (_LevelMatrix in _mats), pulled over Arrow at the first exact
         #     search at the version. It is immutable, so concurrent
         #     requests share it; it is evicted with its frame; and it is
-        #     gated: a level over DRIVER_MATRIX_MAX_BYTES, or holding a row
-        #     that is not exactly `dim` finite elements, memoises None and
-        #     stays on the cached SQL statement (_exact). close() releases
-        #     frames, views and matrices;
+        #     gated: a level over driver.DRIVER_PULL_MAX_BYTES (rows × dim
+        #     float64), or holding a row that is not exactly `dim` finite
+        #     elements, memoises None and stays on the cached SQL
+        #     statement (_exact). close() releases frames, views and
+        #     matrices;
         #   * the "search" FAIR pool is tagged only around code that can
         #     submit a job (the memo build and matrix pull in _matrix, the
         #     SQL or tier collect in _candidates), so a search answered
@@ -417,7 +418,7 @@ class SparkVectorService:
         (golden shape README.md:17-65).
 
         Only the candidate stage can be a Spark job. On the exact tier a
-        manifested level under the size gate (DRIVER_MATRIX_MAX_BYTES) is
+        manifested level under the size gate (driver.DRIVER_PULL_MAX_BYTES) is
         answered in NumPy from its driver-resident matrix, pulled once per
         manifest version, so an uncached search runs no Spark job; any
         other level runs one SQL statement (one parse, one analysis) over
@@ -1261,11 +1262,6 @@ _INGEST_SCHEMA = pa.schema(
 #: candidate-stage tiers every search entry point routes through
 _TIERS = ("exact", "ivf", "graph", "bq", "sq8")
 
-#: size gate of a driver-resident level matrix (rows × dim float64; the
-#: IVF seed broadcast's default bound): a level over it stays on the
-#: cached SQL statement, so the driver holds at most this much per level
-DRIVER_MATRIX_MAX_BYTES = 128 * 1024 * 1024
-
 #: a collected candidate row, as the exact statement's rows are
 _HIT = Row("chunk_id", "file_id", "file_name", "case_decision", "score")
 
@@ -1289,14 +1285,15 @@ class _LevelMatrix:
     @classmethod
     def pull(cls, df: DataFrame, dim: int) -> _LevelMatrix | None:
         """The level frame `df` over Arrow, or None if it stays on SQL:
-        more rows than the gate admits (at most one row over it is
-        pulled), or a row that is not exactly `dim` finite elements. Spark
+        more rows than driver.pull's gate admits at `dim` float64s a row,
+        or a row that is not exactly `dim` finite elements. Spark
         gives such a row a NULL (or non-finite) dist, which it orders and
         rounds as NumPy does not."""
-        max_rows = DRIVER_MATRIX_MAX_BYTES // (8 * dim)
-        table = df.select(*_HIT[:4], "embedding").limit(max_rows + 1).toArrow()
+        table = driver.pull(df.select(*_HIT[:4], "embedding"), 8 * dim)
+        if table is None:
+            return None
         lists = table.column("embedding").combine_chunks()
-        if table.num_rows > max_rows or lists.null_count:
+        if lists.null_count:
             return None
         flat = lists.flatten()
         if (lists.value_lengths().to_numpy() != dim).any() or flat.null_count:

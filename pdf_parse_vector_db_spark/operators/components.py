@@ -4,18 +4,22 @@ Near-dup detection emits PAIRS; dedup needs CLUSTERS (keep one doc per
 component, drop the rest). The bridge is connected components: label every
 doc with the minimum doc_id reachable through the pair graph.
 
-Spark-first shape: Pregel-style min-label propagation as a driver-bounded
-loop of DataFrame joins — each iteration is one shuffle join of the label
-frame against the (symmetrized) edge list plus a min-agg, label frames are
-localCheckpoint()ed to cut lineage, and the loop exits when an iteration
-changes no label (one scalar count per iteration; the data never leaves the
-cluster). Iterations needed = graph diameter, and near-dup components are
+Two tiers behind one size gate (operators/driver.py). A pair list the
+gate admits — near-dup graphs of a few thousand edges — is pulled to the
+driver once over Arrow and resolved in NumPy by min-label propagation
+with pointer jumping, exact at any diameter. Above the gate the data
+never leaves the cluster: Pregel-style min-label propagation runs as a
+driver-bounded loop of DataFrame joins — each iteration is one shuffle
+join of the label frame against the (symmetrized) edge list plus a
+min-agg, label frames are localCheckpoint()ed to cut lineage, and the
+loop exits when a step changes no label (one scalar count per double
+step). Iterations needed = graph diameter, and near-dup components are
 shallow (dup clusters are cliques or near-cliques from banding, diameter
 ≤ ~3), so the loop runs 2-4 rounds in practice. For adversarially deep
 graphs `connected_components_star` implements the large-star/small-star
 contraction (Kiveris et al., "Connected Components in MapReduce"), which
 converges in O(log² n) rounds on any topology — the 100 TB deep-graph
-tier; GraphFrames' run is the same pattern packaged.
+tier, always on Spark; GraphFrames' run is the same pattern packaged.
 
 No reference citation: the reference dedups only by exact file_id match
 (extract_and_embed.py:85-131); components are the driver-mandated
@@ -24,8 +28,12 @@ LLM-pipeline extension (BASELINE.json).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from pdf_parse_vector_db_spark.operators import driver
 
 MAX_ITERATIONS = 20
 
@@ -48,6 +56,35 @@ def _min_label_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
+def min_labels(a: np.ndarray, b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """The components of the undirected edges (a[i], b[i]) on the driver:
+    (every node id ascending, its component's minimum id).
+
+    Labels are node ranks, so a smaller label is a smaller id. Each round
+    lowers both endpoints of every edge, and both endpoints' labels
+    (hooking their roots), to the edge's smaller label, then jumps
+    pointers (lab ← lab[lab]) until each label is a root. Labels only
+    fall and each stays inside its node's component, so the loop ends;
+    it ends when a round changes nothing, when every edge joins equal
+    labels that are roots, and a component's minimum keeps its own
+    label, so that root is the minimum. Pointer jumping makes the round
+    count logarithmic in practice, never more than the diameter's."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    ai, bi = inv[: a.size], inv[a.size :]
+    lab = np.arange(ids.size)
+    while True:
+        la, lb = lab[ai], lab[bi]
+        m = np.minimum(la, lb)
+        new = lab.copy()
+        for at in (ai, bi, la, lb):
+            np.minimum.at(new, at, m)
+        while not np.array_equal(jumped := new[new], new):
+            new = jumped
+        if np.array_equal(new, lab):
+            return ids, ids[lab]
+        lab = new
+
+
 def connected_components(
     pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b"
 ) -> DataFrame:
@@ -58,16 +95,41 @@ def connected_components(
     Deterministic fixpoint — engine-portable, so oracle-checkable against
     a recursive-CTE transitive closure.
 
+    A pair list under the driver gate (driver.pull_ids) is collected once
+    and resolved by min_labels; the result is a local DataFrame with the
+    Spark loop's schema, so the caller's plan goes on in Spark. A pair list
+    over the gate, or whose ids are not integral, differ in type or hold
+    a NULL, runs the Spark loop (_spark_components)."""
+    cols = driver.pull_ids(pairs, a_col, b_col)
+    if cols is None:
+        return _spark_components(pairs, a_col, b_col)
+    a, b = pairs.schema[a_col], pairs.schema[b_col]
+    # the Spark loop's schema: a node is as nullable as the pair columns,
+    # a min() label always is
+    schema = StructType(
+        [
+            StructField("doc_id", a.dataType, a.nullable or b.nullable),
+            StructField("component_id", a.dataType),
+        ]
+    )
+    return driver.frame(pairs.sparkSession, schema, *min_labels(*cols))
+
+
+def _spark_components(pairs: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """connected_components above the driver gate: min-label propagation
+    as a loop of DataFrame joins, capped at MAX_ITERATIONS steps.
+
     Job-floor economics (round 8): the symmetrized edge relation is
     checkpointed ONCE (lazily — it materializes inside the first round's
     job) instead of re-deriving its union+distinct chain in every round's
-    plan; each materialization runs TWO propagation steps (min-label
-    updates are monotone non-increasing, so endpoint equality across the
-    double step proves neither step changed anything — same fixpoint,
-    half the per-round barriers); and the convergence signal rides a
-    fused `chg` flag in the checkpointed frame instead of a separate
-    old-vs-new shuffle join. Measured 4.8 s → 1.7 s on the dbscan
-    eps-graph at sf0.1 with identical labels."""
+    plan; each materialization runs TWO propagation steps and tests the
+    second against the first (min-label updates are monotone
+    non-increasing, so a second step that changes nothing proves the
+    first reached the fixpoint — found one round sooner on odd-diameter
+    graphs than testing against the labels before both steps); and the
+    convergence signal rides a fused `chg` flag in the checkpointed frame
+    instead of a separate old-vs-new shuffle join. Measured 4.8 s → 1.7 s
+    on the dbscan eps-graph at sf0.1 with identical labels."""
     sym = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).union(
         pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     )
@@ -88,15 +150,18 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     for _ in range(MAX_ITERATIONS // 2):
-        stepped = _min_label_step(edges, _min_label_step(edges, labels))
+        once = _min_label_step(edges, labels)
+        twice = _min_label_step(edges, once)
         # LAZY checkpoint + convergence agg in ONE action (round 11): the
         # agg's job materializes the checkpoint as it reads it, so each
         # double-step round costs one driver action instead of two (the
         # former eager cut paid its own job, then the agg paid another);
-        # the frame is node-sized, no memory-cliff risk
+        # the frame is node-sized, no memory-cliff risk. The flag compares
+        # the two steps: `once` is read twice in one plan, whose exchange
+        # Spark reuses, so the earlier test adds no exchange
         flagged = (
-            stepped.join(
-                labels.select("node", F.col("label").alias("prev")), on="node"
+            twice.join(
+                once.select("node", F.col("label").alias("prev")), on="node"
             )
             .select(
                 "node",

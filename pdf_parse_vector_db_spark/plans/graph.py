@@ -26,9 +26,12 @@ extension (BASELINE.json north_star).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
+from pdf_parse_vector_db_spark.operators import driver
 from pdf_parse_vector_db_spark.plans.registry import QuerySpec
 from pdf_parse_vector_db_spark.sources.registry import load_table
 
@@ -359,6 +362,31 @@ KCORE_PEEL_SQL = _kcore_sql()
 _LPA_ROUNDS = 3
 
 
+def _lpa_top(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """label_propagation on the driver over the canonical edges (x[i],
+    y[i]): the top-20 (community, n_nodes) of round _LPA_ROUNDS.
+
+    Labels are node ranks, so a smaller label is a smaller id. A round
+    counts every (node, neighbour's label) pair with np.unique, which
+    sorts them by (node, label); a stable sort by (node, count DESC)
+    then leaves each node's most frequent, smallest label first —
+    mode(label, true), and the oracle's row_number over (c DESC, label
+    ASC)."""
+    ids, src = np.unique(np.concatenate([x, y]), return_inverse=True)
+    dst = np.concatenate([src[x.size :], src[: x.size]])  # both directions
+    n = ids.size
+    lab = np.arange(n)
+    for _ in range(_LPA_ROUNDS):
+        keys, counts = np.unique(src * n + lab[dst], return_counts=True)
+        node = keys // n
+        best = np.lexsort((-counts, node))
+        first = np.flatnonzero(np.diff(node[best], prepend=-1))
+        lab = (keys % n)[best[first]]
+    labels, sizes = np.unique(lab, return_counts=True)
+    top = np.lexsort((labels, -sizes))[:20]
+    return ids[labels[top]], sizes[top]
+
+
 def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3 unrolled rounds of synchronous label propagation (Raghavan et
     al. 2007, public) on the part co-order graph — the cheap community
@@ -367,20 +395,44 @@ def label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the rounds are deterministic and oracle-comparable). Emits the 20
     largest round-3 communities.
 
-    Scale shape per round: edges join the |nodes|-row label table on the
-    neighbor key (co-partitioned after the first exchange), then ONE
-    node-keyed exchange: `mode(label, deterministic=true)` is exactly
+    An edge list under the driver gate (driver.pull_ids) is collected
+    once and the rounds run in NumPy (_lpa_top); the 20 rows come back
+    as a local DataFrame with the Spark rounds' schema.
+
+    Above the gate, the scale shape per round: edges join the
+    |nodes|-row label table on the neighbor key (co-partitioned after
+    the first exchange), then ONE node-keyed exchange:
+    `mode(label, deterministic=true)` is exactly
     most-frequent-with-lowest-tie-break, so the round-2 shape's
     (node,label) count exchange + per-node argmax window (two exchanges
     and a sort per round) collapses into a single partial-aggregating
     mode(). The oracle keeps the equivalent window formulation — DuckDB's
     mode() tie-break is unspecified, Spark's deterministic one is pinned.
     """
+    und = _co_order_edges(spark, sf_dir)
+    cols = driver.pull_ids(und, "x", "y")
+    if cols is None:
+        return _spark_lpa(und)
+    return driver.frame(
+        spark,
+        StructType(
+            [
+                StructField("community", und.schema["x"].dataType),
+                StructField("n_nodes", LongType(), nullable=False),
+            ]
+        ),
+        *_lpa_top(*cols),
+    )
+
+
+def _spark_lpa(und: DataFrame) -> DataFrame:
+    """label_propagation above the driver gate, over the canonical edges
+    `und` (x < y): the rounds as joins and mode() aggregates."""
     # checkpoint the canonical edges BEFORE symmetrizing: the union reads
     # und twice, and without the cut the whole array-expansion build would
     # run twice inside the edges materialization (lazy: it rides the
     # eager edges materialization below, so no extra job)
-    und = _co_order_edges(spark, sf_dir).localCheckpoint(eager=False)
+    und = und.localCheckpoint(eager=False)
     edges = und.unionAll(
         und.select(F.col("y").alias("x"), F.col("x").alias("y"))
     ).localCheckpoint()  # EAGER — the sf1 memory-cliff lesson, see kcore_peel

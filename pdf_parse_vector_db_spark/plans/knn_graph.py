@@ -811,10 +811,12 @@ def _dbscan_from_pairs(
     # topology (Kiveris et al.); label equivalence with propagation is
     # pinned in tests/test_components.py. The same-cell tier's components
     # are cell-bounded and shallow, where min-label measures ~1.6x faster
-    # (bench pair: star cost +3.2 s there) — it keeps propagation, and the
-    # round-11 non-convergence guard in connected_components RAISES loudly
-    # (instead of returning wrong labels) if a future corpus ever makes
-    # same-cell components deep.
+    # (bench pair: star cost +3.2 s there) — it keeps propagation. Below
+    # the driver gate (operators/driver.py) propagation runs on the driver
+    # with pointer jumping and is exact at any depth; above it the Spark
+    # loop's round-11 non-convergence guard RAISES loudly (instead of
+    # returning wrong labels) if a future corpus ever makes same-cell
+    # components deep.
     if deep:
         from pdf_parse_vector_db_spark.operators.components import (
             connected_components_star as connected_components,

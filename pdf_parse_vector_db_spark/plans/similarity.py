@@ -1524,10 +1524,11 @@ FROM num CROSS JOIN den CROSS JOIN nr CROSS JOIN tr
 
 def dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X1/X2: resolve exact-Jaccard near-dup PAIRS into CLUSTERS via
-    connected components (operators/components.py, Pregel-style min-label
-    propagation) — the pair→cluster step a dedup pipeline needs before it
-    can pick one keeper per group. Deterministic fixpoint, so the oracle
-    cross-checks it with a recursive-CTE transitive closure."""
+    connected components (operators/components.py, min-label propagation:
+    on the driver below its size gate, Pregel-style above) — the
+    pair→cluster step a dedup pipeline needs before it can pick one
+    keeper per group. Deterministic fixpoint, so the oracle cross-checks
+    it with a recursive-CTE transitive closure."""
     from pdf_parse_vector_db_spark.operators.components import connected_components
 
     docs = load_table(spark, sf_dir, "documents", spread=True)

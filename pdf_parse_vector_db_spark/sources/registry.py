@@ -14,9 +14,11 @@ the partition columns chosen in plans/ingest.py.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Driver fixture tables (TESTDATA.md / FIXTURES.md §A).
 TABLE_NAMES = [
@@ -32,6 +34,33 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
+#: the session conf that changes how a parquet nanosecond timestamp infers
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+#: inferred schema of a local parquet file, by (path, size, mtime_ns,
+#: nanosAsLong): a rewrite of the file changes its key
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """spark.read.parquet(path), whose schema inference runs one Spark job
+    a call, with the inference memoised per version of a local file: a
+    later read passes the schema it inferred, so it runs no job. Any
+    other path (a directory, a remote URI) is inferred on every read."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (path, st.st_size, st.st_mtime_ns, spark.conf.get(_NANOS_AS_LONG, "false"))
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
 
 def load_table(
     spark: SparkSession, sf_dir: str, name: str, spread: bool = False
@@ -45,6 +74,10 @@ def load_table(
     the same ns→us truncation DuckDB applies, so both engines see identical
     instants.
 
+    The inferred parquet schema is memoised per file version
+    (_read_parquet), so only the first read of a file runs an inference
+    job.
+
     ``spread=True`` repartitions the scan to full parallelism before the
     caller's map stage. Parquet splits at row-group granularity, so a
     single-row-group file is one task no matter how many cores exist; for
@@ -55,8 +88,8 @@ def load_table(
     exchange would only cost."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        spark.conf.set(_NANOS_AS_LONG, "true")
+        df = _read_parquet(spark, path)
         ts_type = dict((f.name, f.dataType.simpleString()) for f in df.schema.fields).get("ts")
         if ts_type == "bigint":
             df = df.withColumn(
@@ -70,7 +103,7 @@ def load_table(
             # the wall-clock values are identical to the naive oracle's.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     if spread:
         df = df.repartition(spark.sparkContext.defaultParallelism)
     return df

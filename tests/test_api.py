@@ -751,10 +751,10 @@ def test_uncached_search_is_one_single_stage_job(spark, tmp_path, monkeypatch):
     no window or aggregate — the per-file dedup, top-k and statistics run
     on the driver over the collected candidates. The gate's decision is
     memoised: the level is pulled once, not per request."""
-    from pdf_parse_vector_db_spark import api
+    from pdf_parse_vector_db_spark.operators import driver
     from pdf_parse_vector_db_spark.sources import manifest as M
 
-    monkeypatch.setattr(api, "DRIVER_MATRIX_MAX_BYTES", 0)
+    monkeypatch.setattr(driver, "DRIVER_PULL_MAX_BYTES", 0)
     path = str(tmp_path / "wh")
     svc = SparkVectorService(spark, path, manifested=True, auto_compact_commits=0)
     for i in range(3):
@@ -796,7 +796,7 @@ def test_wrong_length_embedding_keeps_the_level_on_sql(spark, tmp_path, monkeypa
 
     from pyspark.sql import functions as F
 
-    from pdf_parse_vector_db_spark import api
+    from pdf_parse_vector_db_spark.operators import driver
     from pdf_parse_vector_db_spark.sources import manifest as M
 
     path = str(tmp_path / "wh")
@@ -819,7 +819,7 @@ def test_wrong_length_embedding_keeps_the_level_on_sql(spark, tmp_path, monkeypa
     assert svc._mats == {(v, 3): None}
     assert got["result_count"] == 4
     assert "score" not in got["results"][0]  # the NULL dist sorts first
-    monkeypatch.setattr(api, "DRIVER_MATRIX_MAX_BYTES", 0)
+    monkeypatch.setattr(driver, "DRIVER_PULL_MAX_BYTES", 0)
     with SparkVectorService(spark, path, manifested=True) as sql_side:
         want = sql_side.search_similar_cases("query.pdf", QUERY, court_level=2)
     assert json.dumps(got) == json.dumps(want)

@@ -493,6 +493,55 @@ def test_label_propagation_round3_is_valid_labeling(spark):
     assert sum(sizes) <= 2000  # bounded by node count; top-20 cut
 
 
+def _random_co_order_edges(rng, n_nodes: int, n_edges: int) -> list:
+    """Canonical (x < y) distinct edges over n_nodes ids scattered in
+    0..999, so id order and node order differ."""
+    ids = rng.sample(range(1000), n_nodes)
+    edges = {tuple(sorted(rng.sample(ids, 2))) for _ in range(n_edges)}
+    return sorted(edges)
+
+
+def test_driver_lpa_matches_the_spark_rounds_on_ties(spark):
+    """The NumPy rounds give the Spark rounds' top 20, row for row, on
+    random graphs. Every round-1 label is distinct, so each node of degree
+    ≥ 2 breaks a count tie by the smallest label; the dense small graphs
+    tie again in later rounds, and graphs of over 20 communities cut the
+    top 20 across equal sizes."""
+    import random
+
+    import numpy as np
+
+    from pdf_parse_vector_db_spark.plans.graph import _lpa_top, _spark_lpa
+
+    rng = random.Random(5)
+    shapes = [(6, 8), (12, 30), (30, 25), (40, 60), (60, 45), (25, 150)]
+    for n_nodes, n_edges in shapes * 2:
+        edges = _random_co_order_edges(rng, n_nodes, n_edges)
+        want = [tuple(r) for r in _spark_lpa(spark.createDataFrame(edges, "x int, y int")).collect()]
+        x, y = (np.array(c, dtype=np.int32) for c in zip(*edges))
+        got = list(zip(*(a.tolist() for a in _lpa_top(x, y))))
+        assert got == want, (edges, got, want)
+
+
+def test_label_propagation_on_both_sides_of_the_driver_gate(spark, monkeypatch):
+    """Under the gate the query is a local frame the driver computed; at a
+    gate of 0 it is the Spark rounds' plan. Both give the same rows and
+    the same schema."""
+    from pdf_parse_vector_db_spark.operators import driver
+    from pdf_parse_vector_db_spark.plans.graph import label_propagation
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    local = label_propagation(spark, SF_SMOKE)
+    assert plan(local).count("LocalTableScan") == 1 and "Exchange" not in plan(local)
+    monkeypatch.setattr(driver, "DRIVER_PULL_MAX_BYTES", 0)
+    rounds = label_propagation(spark, SF_SMOKE)
+    assert "LocalTableScan" not in plan(rounds)
+    assert local.schema == rounds.schema
+    assert local.collect() == rounds.collect()
+
+
 def test_length_emd_matches_scipy_free_reference(spark):
     """Exact 1-D Wasserstein == the sorted-sample integral computed in
     Python over the same two samples."""
